@@ -244,12 +244,13 @@ object Blocking {
     // UNABLE_TO_ACQUIRE_MEMORY in the 6M-doc dress rehearsal (BASELINE.md
     // lesson 5). The sorted-neighborhood branch orders by (mention,
     // id128(id)): similar anchor mentions sit adjacently (the recall
-    // signal), and the tiebreak is the id's 128-bit hash so the STRING-id
-    // and HASH-id disciplines (ErPipeline.Config.hashIds) visit hot-block
-    // neighbors in the IDENTICAL order — on the hash path the id already
-    // IS id128(url), so hashing the tiebreak on the string path makes the
-    // two pair sets equal by construction (property-tested end-to-end in
-    // ErPipelineSpec).
+    // signal), and the tiebreak is the id's 128-bit hash so url-keyed and
+    // hash-keyed blocks visit hot-block neighbors in the IDENTICAL order —
+    // ErPipeline.run keys on id128(url) already, while
+    // ErPipeline.incremental folds a batch into url-keyed state; hashing
+    // the tiebreak on string ids makes their pair sets equal by
+    // construction, which `incremental ≡ full rebuild` relies on
+    // (property-tested in ErPipelineSpec).
     val tiebreak: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       if (blocks.schema("url").dataType == org.apache.spark.sql.types.StringType) id128
       else identity

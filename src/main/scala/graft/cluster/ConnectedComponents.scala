@@ -1,8 +1,9 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 
 /**
  * Transitive clustering (SURVEY.md §2.5 A6): iterative large-star/small-star
@@ -27,8 +28,8 @@ import org.apache.spark.sql.functions._
  *  - `localCheckpoint` truncates lineage every round (else the plan doubles);
  *  - convergence is detected by a (count, xor-of-hashes) checksum — one
  *    cheap aggregate per round instead of a full `except`;
- *  - once the contracted edge set fits a fixed driver budget (default 2M
- *    thin pairs, see [[localFinishEdges]]) the component closure finishes
+ *  - once the contracted edge set fits a fixed driver budget (2M thin
+ *    pairs, see [[localFinishEdges]]) the component closure finishes
  *    with an in-memory union-find instead of more star rounds. The star
  *    loop contracts geometrically, so at 10^12 documents it still does all
  *    the heavy lifting (~8 rounds to reach 2M edges); what the local finish
@@ -39,19 +40,22 @@ import org.apache.spark.sql.functions._
  *    iterations at bench scale). Same bounded-driver-step class as the
  *    ANN top-up chunking (graft.ann.Ann.completeTopK).
  *
- * Node ids are whatever orderable type the caller shuffles cheapest —
- * every edge-set operation here (window min, least/greatest, distinct,
- * xxhash64 checksum) is type-agnostic. Two id disciplines are in use:
- *  - STRING urls (cc_components query, dedup groups): self-describing,
- *    zero-collision by construction, ~60-80 B per shuffled id;
+ * Node ids come in exactly two types, one per id discipline in use:
+ *  - STRING urls (cc_components query, dedup groups, batch-incremental
+ *    ER): self-describing, zero-collision by construction, ~60-80 B per
+ *    shuffled id;
  *  - 128-bit hash structs (the ER hot path, graft.pipeline.ErPipeline):
  *    STRUCT<h1:BIGINT,h2:BIGINT> = 16 B per id — the same two-lane xxhash64
  *    identity the dedup tier trusts (collision math at
  *    graft.dedup.Dedup.contentKey128: ~10^-15 expected corpus-wide false
  *    merges at 10^12 docs), with urls restored once at pipeline output.
- * cluster_id is the component's minimum id under Spark's ordering for the
- * id type (deterministic labeling, SURVEY.md §7.4.4); string-id callers get
- * the lexicographic min url.
+ * The star loop's edge-set operations (window min, least/greatest,
+ * distinct, xxhash64 checksum) are type-agnostic; the driver-side local
+ * finish has one concrete implementation per type, and [[converge]]
+ * rejects any other id type up front. cluster_id is the component's
+ * minimum id under Spark's ordering for the id type (deterministic
+ * labeling, SURVEY.md §7.4.4); string-id callers get the lexicographic min
+ * url.
  */
 object ConnectedComponents {
 
@@ -61,26 +65,22 @@ object ConnectedComponents {
     * that many map tasks per downstream stage PER ITERATION — measured
     * ~1 s/iteration of pure scheduling on a 1.6k-edge graph (64 near-empty
     * tasks × ~6 stages × 6 iterations is the serial floor the north-rule
-    * scaling measurement pays at every cluster size). Env-overridable for
-    * A/B measurement only. */
-  private def ccFanIn: Int =
-    sys.env.get("GRAFT_CC_FANIN").map(_.toInt).getOrElse(16)
+    * scaling measurement pays at every cluster size). */
+  private val ccFanIn = 16
 
   /** Target thin-edge rows per loop shuffle partition (~60-100 MB of
-    * (url, url) pairs). Env-overridable for A/B measurement only. */
-  private def rowsPerPartition: Long =
-    sys.env.get("GRAFT_CC_ROWS_PER_PARTITION").map(_.toLong).getOrElse(500000L)
+    * (url, url) pairs). */
+  private val rowsPerPartition = 500000L
 
   /** Driver budget for the union-find finish: edge sets at or below this
     * row count are collected and closed in memory. 2M (url, url) pairs at
     * ~60 B/url is ≲ 250 MB of driver heap transiently — the same order as
     * one collected ANN top-up chunk, and two orders below the driver heap
-    * any production Spark cluster runs with. 0 disables the local finish
-    * (distributed star rounds all the way to fixpoint — the path the
-    * property tests pin against the union-find oracle). Env-overridable
-    * for A/B measurement only. */
-  private[cluster] def localFinishEdges: Long =
-    sys.env.get("GRAFT_CC_LOCAL_EDGES").map(_.toLong).getOrElse(2000000L)
+    * any production Spark cluster runs with. Callers pass 0 as
+    * `localEdgeBudget` to disable the local finish (distributed star rounds
+    * all the way to fixpoint — the path the property tests pin against the
+    * union-find oracle). */
+  private[cluster] val localFinishEdges = 2000000L
 
   /** Shuffle-partition count for one loop iteration, sized from the CURRENT
     * edge count: `max(ccFanIn, edges / rowsPerPartition)`. At bench scale
@@ -107,11 +107,12 @@ object ConnectedComponents {
   private final case class Converged(
       assign: DataFrame,
       rootsIncluded: Boolean,
-      lookup: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column],
+      lookup: Option[Column => Column],
       cleanup: () => Unit)
 
   /**
-   * @param edges DataFrame with two string columns (default url_a/url_b)
+   * @param edges DataFrame with two id columns (default url_a/url_b), both
+   *        STRING or both STRUCT<long,long>
    * @return (url, cluster_id) for every node that appears in `edges`
    */
   def run(edges: DataFrame, aCol: String = "url_a", bCol: String = "url_b",
@@ -152,6 +153,10 @@ object ConnectedComponents {
   private def converge(edges: DataFrame, aCol: String, bCol: String,
                        maxIterations: Int, localEdgeBudget: Long,
                        edgesCanonical: Boolean = false): Converged = {
+    val idType = edges.schema(aCol).dataType
+    require(idType == StringType || isId128(idType),
+      s"connected components needs STRING or STRUCT<long,long> node ids, " +
+        s"got ${idType.simpleString}")
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -161,15 +166,12 @@ object ConnectedComponents {
     // the same stage) at ccFanIn tasks — measured 600+ CPU-seconds starved
     // onto 16 tasks at 400k docs. Only the in-loop checkpoints (sized from
     // the shrinking edge count) use the small fan-in.
-    val tEdges0 = System.nanoTime()
     val renamed = edges.select(col(aCol).as("u"), col(bCol).as("v"))
     val e0 = (if (edgesCanonical) renamed
               else renamed.filter($"u" =!= $"v").distinct())
       .localCheckpoint(eager = true)
 
     val initialEdges = e0.count() // cheap: counts the checkpoint blocks
-    if (sys.env.contains("GRAFT_CC_VERBOSE"))
-      println(f"[cc] edges_materialized n=$initialEdges sec=${(System.nanoTime() - tEdges0) / 1e9}%.2f")
     val e0Blocks = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(e0)
     def freeE0(): Unit = e0Blocks.foreach(_.unpersist(blocking = false))
     if (initialEdges == 0L)
@@ -177,10 +179,7 @@ object ConnectedComponents {
         e0.select($"u".as("url"), $"v".as("cluster_id")), rootsIncluded = false,
         None, () => freeE0())
     if (initialEdges <= localEdgeBudget && localEdgeBudget > 0L) {
-      val tLf0 = System.nanoTime()
       val (assign, look, done) = localFinish(spark, e0)
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        println(f"[cc] local_finish sec=${(System.nanoTime() - tLf0) / 1e9}%.2f")
       // assign reads e0 (its node set) — blocks stay alive until the caller
       // materializes, then cleanup frees them with the label broadcast
       return Converged(assign, rootsIncluded = true, Some(look),
@@ -209,7 +208,6 @@ object ConnectedComponents {
     loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
     var e = org.apache.spark.sql.graftbridge.ColumnBridge.rebindToSession(loop, e0)
 
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     var converged = false
     var iter = 0
     var lastSig: (Long, Long) = (-1L, -1L)
@@ -252,7 +250,6 @@ object ConnectedComponents {
     }
 
     while (!converged && iter < maxIterations) {
-      val iterT0 = System.nanoTime()
       val small = starRound(e)
 
       // lazy checkpoint: the checksum aggregate below materializes it, so
@@ -269,7 +266,6 @@ object ConnectedComponents {
       // waiting for the async ContextCleaner (GC-stall avoidance)
       prevBlocks.foreach(_.unpersist(blocking = false))
       prevBlocks = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(next)
-      if (verbose) println(f"[cc] iter=$iter edges=${sig._1} parts=$parts sec=${(System.nanoTime() - iterT0) / 1e9}%.2f converged=$converged")
       lastSig = sig
       e = next
       iter += 1
@@ -308,53 +304,24 @@ object ConnectedComponents {
       () => finalBlocks.foreach(_.unpersist(blocking = false)))
   }
 
-  /** Driver-side ordering matching Spark's own for the supported node-id
-    * types (string ids compare as Java strings — identical to UTF8String
-    * binary order for the ASCII urls this pipeline produces; struct ids
-    * compare field-by-field). The local finish's min-id labeling must agree
-    * with the distributed path's `min`/`least`, or the two finishes would
-    * label identical components differently. */
-  private def nodeOrdering(dt: org.apache.spark.sql.types.DataType): Ordering[AnyRef] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => Ordering.by[AnyRef, String](_.asInstanceOf[String])
-      case LongType => Ordering.by[AnyRef, Long](_.asInstanceOf[java.lang.Long].longValue())
-      case IntegerType => Ordering.by[AnyRef, Int](_.asInstanceOf[java.lang.Integer].intValue())
-      case st: StructType =>
-        val fieldOrds = st.fields.map(f => nodeOrdering(f.dataType))
-        new Ordering[AnyRef] {
-          def compare(a: AnyRef, b: AnyRef): Int = {
-            val ra = a.asInstanceOf[org.apache.spark.sql.Row]
-            val rb = b.asInstanceOf[org.apache.spark.sql.Row]
-            var i = 0
-            while (i < fieldOrds.length) {
-              val c = fieldOrds(i).compare(
-                ra.get(i).asInstanceOf[AnyRef], rb.get(i).asInstanceOf[AnyRef])
-              if (c != 0) return c
-              i += 1
-            }
-            0
-          }
-        }
-      case other => throw new IllegalArgumentException(
-        s"unsupported connected-components node id type: $other")
-    }
+  private def isId128(dt: DataType): Boolean = dt match {
+    case st: StructType => st.fields.length == 2 && st.fields.forall(_.dataType == LongType)
+    case _ => false
   }
 
   /** Bounded driver-side closure: collect ≤ [[localFinishEdges]] thin pairs,
-    * union-find with path compression, label every component by its minimum
+    * close them with [[componentMins]], label every component by its minimum
     * id (the loop's deterministic labeling contract), and BROADCAST the
     * node → label map instead of re-creating a LocalRelation of O(nodes)
     * rows on the driver (measured 4.5 s of single-threaded encode + a
     * downstream shuffle join at 940k edges; the broadcast + narrow lookup
-    * costs ~1 s and no shuffle). Node-type-agnostic: ids are collected as
-    * external values (String, or Row for 128-bit hash structs — Row's
-    * value-based equals/hashCode make it a usable map key) and labeled with
-    * [[nodeOrdering]]. Returns the assignment over the edge set's own
-    * (distributed, distinct) node set, the lookup expression builder for
-    * callers with a wider node universe, and the broadcast's destroy
-    * callback. Replaces the geometric tail of near-empty star rounds whose
-    * per-round cost is pure stage-wave latency on ANY cluster size.
+    * costs ~1 s and no shuffle). The edge column's type picks one of the two
+    * concrete finishes, [[localFinishString]] or [[localFinish128]]. Returns
+    * the assignment over the edge set's own (distributed, distinct) node
+    * set, the lookup expression builder for callers with a wider node
+    * universe, and the broadcast's destroy callback. Replaces the geometric
+    * tail of near-empty star rounds whose per-round cost is pure stage-wave
+    * latency on ANY cluster size.
     *
     * Driver-memory contract: the collect is bounded by [[localFinishEdges]]
     * rows, but the BYTES depend on the id width — 2M (url, url) pairs at
@@ -362,93 +329,98 @@ object ConnectedComponents {
     * is why graft.ops.Sessions raises it to 4g in every production session
     * (16-byte hash ids sit two orders below the ceiling). Callers running
     * bare sessions near the 2M budget must either raise maxResultSize or
-    * lower `GRAFT_CC_LOCAL_EDGES`. */
+    * pass a smaller `localEdgeBudget`. */
   private def localFinish(spark: SparkSession, edges: DataFrame)
-      : (DataFrame, org.apache.spark.sql.Column => org.apache.spark.sql.Column, () => Unit) = {
-    import spark.implicits._
-    val nodeType = edges.schema("u").dataType
-    nodeType match {
-      // the production default (ErPipeline.Config.hashIds) finishes on
-      // 128-bit struct ids: specialize to primitive arrays — the generic
-      // path below collects boxed Rows, builds a HashMap[Row, Row] and
-      // broadcasts it through java serialization, which stage telemetry
-      // measured as a 7.6 s single-threaded driver gap at the 2 M-edge
-      // budget (900k-doc corpus) — pure core-count-independent floor that
-      // caps the N-vs-4N scaling ratio
-      case st: org.apache.spark.sql.types.StructType
-          if st.fields.length == 2 &&
-            st.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) =>
-        return localFinish128(spark, edges, st)
-      case _ => ()
+      : (DataFrame, Column => Column, () => Unit) = {
+    val (look, destroy) = edges.schema("u").dataType match {
+      case StringType => localFinishString(spark, edges)
+      case st: StructType => localFinish128(spark, edges, st)
     }
-    val ord = nodeOrdering(nodeType)
-    val pairs = edges.select($"u", $"v").collect()
+    val assign = edges.select(col("u").as("url")).unionAll(edges.select(col("v").as("url")))
+      .distinct()
+      .select(col("url"), look(col("url")).as("cluster_id"))
+    (assign, (c: Column) => look(c), destroy)
+  }
 
-    val idx = new java.util.HashMap[AnyRef, Int](pairs.length * 2)
-    val names = new scala.collection.mutable.ArrayBuffer[AnyRef](pairs.length)
-    def id(s: AnyRef): Int = {
-      val existing = idx.getOrDefault(s, -1)
-      if (existing >= 0) existing
-      else { idx.put(s, names.length); names += s; names.length - 1 }
-    }
-    val parent = new scala.collection.mutable.ArrayBuffer[Int](pairs.length)
+  /** Union-find with path compression over dense node indices `0 until n`
+    * joined by the edges `(ea(i), eb(i))`; returns, for every node, the
+    * index of its component's minimum node under `less`. */
+  private def componentMins(n: Int, ea: Array[Int], eb: Array[Int],
+                            less: (Int, Int) => Boolean): Array[Int] = {
+    val parent = Array.range(0, n)
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x // path compression
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != r) { val next = parent(c); parent(c) = r; c = next }
       r
     }
-    pairs.foreach { row =>
-      val (ia, ib) = (id(row.get(0).asInstanceOf[AnyRef]), id(row.get(1).asInstanceOf[AnyRef]))
-      while (parent.length < names.length) parent += parent.length
-      val (ra, rb) = (find(ia), find(ib))
+    var e = 0
+    while (e < ea.length) {
+      val ra = find(ea(e)); val rb = find(eb(e))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      e += 1
     }
-    // min-id label per component root
-    val minName = new java.util.HashMap[Int, AnyRef]()
+    val minIdx = Array.fill(n)(-1)
     var i = 0
-    while (i < names.length) {
+    while (i < n) {
       val r = find(i)
-      val cur = minName.get(r)
-      if (cur == null || ord.lt(names(i), cur)) minName.put(r, names(i))
+      if (minIdx(r) < 0 || less(i, minIdx(r))) minIdx(r) = i
       i += 1
     }
+    Array.tabulate(n)(i => minIdx(find(i)))
+  }
+
+  /** [[localFinish]] for STRING node ids (dedup groups, cc_components,
+    * batch-incremental ER). Labels compare as Java strings — identical to
+    * Spark's UTF8String binary order for the ASCII urls this pipeline
+    * produces, so both finishes label a component alike. */
+  private def localFinishString(spark: SparkSession, edges: DataFrame)
+      : (UserDefinedFunction, () => Unit) = {
+    // Rows in, java-UDF overload out: the typed form (a tuple-encoder
+    // collect and a Scala UDF) measured ~60 ms slower per closure of a
+    // few-thousand-edge dedup group set on a 4-vCPU host
+    val pairs = edges.select(col("u"), col("v")).collect()
+    val idx = new java.util.HashMap[String, Integer](pairs.length * 2)
+    val names = new scala.collection.mutable.ArrayBuffer[String](pairs.length)
+    def id(s: String): Int = {
+      val known = idx.get(s)
+      if (known != null) known
+      else { idx.put(s, names.length); names += s; names.length - 1 }
+    }
+    val ea = new Array[Int](pairs.length)
+    val eb = new Array[Int](pairs.length)
+    var e = 0
+    while (e < pairs.length) {
+      ea(e) = id(pairs(e).getString(0)); eb(e) = id(pairs(e).getString(1))
+      e += 1
+    }
+    val mins = componentMins(names.length, ea, eb, (i, j) => names(i) < names(j))
     // node → component label, roots included as self-rows; ≤ 2 × budget
     // entries ≈ the same order of driver memory as the collected pairs
-    val label = new java.util.HashMap[AnyRef, AnyRef](names.length * 2)
-    i = 0
-    while (i < names.length) {
-      label.put(names(i), minName.get(find(i)))
-      i += 1
-    }
+    val label = new java.util.HashMap[String, String](names.length * 2)
+    var i = 0
+    while (i < names.length) { label.put(names(i), names(mins(i))); i += 1 }
     val bc = spark.sparkContext.broadcast(label)
-    // java-UDF overload: the scala closure form fixes the type at compile
-    // time, this one carries the runtime DataType — the struct-id path
-    // passes Rows through unchanged
-    val look = udf(new org.apache.spark.sql.api.java.UDF1[AnyRef, AnyRef] {
-      override def call(u: AnyRef): AnyRef = {
+    val look = udf(new org.apache.spark.sql.api.java.UDF1[String, String] {
+      override def call(u: String): String = {
         val v = bc.value.get(u)
         if (v == null) u else v // absent node = its own singleton component
       }
-    }, nodeType)
-    val assign = edges.select($"u".as("url")).unionAll(edges.select($"v".as("url")))
-      .distinct()
-      .select($"url", look($"url").as("cluster_id"))
-    (assign, (c: org.apache.spark.sql.Column) => look(c), () => bc.destroy())
+    }, StringType)
+    (look, () => bc.destroy())
   }
 
-  /** [[localFinish]] specialized to STRUCT<long,long> node ids (the hot
-    * path): edges collect as four primitive longs per row, the node→dense-id
-    * map is one open-addressed probe table in flat long arrays, and the
-    * broadcast ships five primitive arrays instead of a generic
-    * HashMap[Row, Row] — same union-find, same min-(field-by-field-signed)
-    * labeling contract as [[nodeOrdering]], ~0 boxing. Pinned against the
-    * generic path by the union-find property suite and the ErPipelineSpec
-    * hash-id ≡ string-id end-to-end test. */
-  private def localFinish128(spark: SparkSession, edges: DataFrame,
-                             st: org.apache.spark.sql.types.StructType)
-      : (DataFrame, org.apache.spark.sql.Column => org.apache.spark.sql.Column, () => Unit) = {
+  /** [[localFinish]] for STRUCT<long,long> node ids (the ER hot path):
+    * edges collect as four primitive longs per row, the node→dense-id map
+    * is one open-addressed probe table in flat long arrays, and the
+    * broadcast ships five primitive arrays — ~0 boxing. A boxed
+    * HashMap[Row, Row] broadcast through java serialization measured a
+    * 7.6 s single-threaded driver gap at the 2 M-edge budget (900k-doc
+    * corpus) — pure core-count-independent floor that caps the N-vs-4N
+    * scaling ratio. */
+  private def localFinish128(spark: SparkSession, edges: DataFrame, st: StructType)
+      : (UserDefinedFunction, () => Unit) = {
     import spark.implicits._
     val (f0, f1) = (st.fields(0).name, st.fields(1).name)
     val quads = edges
@@ -485,50 +457,31 @@ object ConnectedComponents {
         nNames - 1
       }
     }
-    val parent = new Array[Int](maxNodes)
-    @inline def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
+    val ea = new Array[Int](nEdges)
+    val eb = new Array[Int](nEdges)
     var e = 0
     while (e < nEdges) {
       val (ah, al, bh, bl) = quads(e)
-      val before = nNames
-      val ia = id(ah, al); val ib = id(bh, bl)
-      var k = before
-      while (k < nNames) { parent(k) = k; k += 1 }
-      val ra = find(ia); val rb = find(ib)
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      ea(e) = id(ah, al); eb(e) = id(bh, bl)
       e += 1
     }
-    // min-id label per root: signed field-by-field compare, identical to
-    // the distributed path's min(struct) / nodeOrdering
-    @inline def less(h1: Long, l1: Long, h2: Long, l2: Long): Boolean =
-      h1 < h2 || (h1 == h2 && l1 < l2)
-    val minIdx = new Array[Int](nNames); java.util.Arrays.fill(minIdx, -1)
-    var i = 0
-    while (i < nNames) {
-      val r = find(i)
-      val cur = minIdx(r)
-      if (cur < 0 || less(nameHi(i), nameLo(i), nameHi(cur), nameLo(cur))) minIdx(r) = i
-      i += 1
-    }
+    // min-id label: signed field-by-field compare, identical to the
+    // distributed path's min(struct)
+    val mins = componentMins(nNames, ea, eb, (i, j) =>
+      nameHi(i) < nameHi(j) || (nameHi(i) == nameHi(j) && nameLo(i) < nameLo(j)))
     val labHi = new Array[Long](nNames)
     val labLo = new Array[Long](nNames)
-    i = 0
+    var i = 0
     while (i < nNames) {
-      val m = minIdx(find(i))
-      labHi(i) = nameHi(m); labLo(i) = nameLo(m)
+      labHi(i) = nameHi(mins(i)); labLo(i) = nameLo(mins(i))
       i += 1
     }
     val bc = spark.sparkContext.broadcast((slotHi, slotLo, slotId, labHi, labLo, mask))
-    val look = udf(new org.apache.spark.sql.api.java.UDF1[AnyRef, AnyRef] {
-      override def call(u: AnyRef): AnyRef = {
-        val row = u.asInstanceOf[org.apache.spark.sql.Row]
-        if (row == null) return u
+    // java-UDF overload: it takes the return type explicitly, so the label
+    // struct keeps the caller's field names
+    val look = udf(new org.apache.spark.sql.api.java.UDF1[Row, Row] {
+      override def call(row: Row): Row = {
+        if (row == null) return row
         val hi = row.getLong(0); val lo = row.getLong(1)
         val (sh, sl, sid, lh, ll, m) = bc.value
         var h = (hi ^ (lo * 0x9e3779b97f4a7c15L))
@@ -536,14 +489,11 @@ object ConnectedComponents {
         var s = h.toInt & m
         while (sid(s) >= 0 && (sh(s) != hi || sl(s) != lo)) s = (s + 1) & m
         val v = sid(s)
-        if (v < 0) u // absent node = its own singleton component
-        else org.apache.spark.sql.Row(lh(v), ll(v))
+        if (v < 0) row // absent node = its own singleton component
+        else Row(lh(v), ll(v))
       }
     }, st)
-    val assign = edges.select($"u".as("url")).unionAll(edges.select($"v".as("url")))
-      .distinct()
-      .select($"url", look($"url").as("cluster_id"))
-    (assign, (c: org.apache.spark.sql.Column) => look(c), () => bc.destroy())
+    (look, () => bc.destroy())
   }
 
   /**

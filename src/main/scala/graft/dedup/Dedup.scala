@@ -481,8 +481,8 @@ object Dedup {
     val withN = rows.join(liveStats.select($"key", $"n", $"pmin"), "key")
 
     // C(n,2) via TWO stock generators (posexplode, then explode of the
-    // tail slice) instead of the custom PairCombinations generator: the
-    // custom Generator is CodegenFallback, which (a) evaluates row-at-a-time
+    // tail slice) instead of a custom pair-combinations Generator: a custom
+    // Generator is CodegenFallback, which (a) evaluates row-at-a-time
     // through interpreted eval and (b) breaks the WholeStageCodegen span
     // around the hottest stream in every near-dup/blocking operator (the
     // pre-dedup pair stream — 4M+ rows at bench sf0.1, ~quadratic in block
@@ -514,8 +514,7 @@ object Dedup {
     //    AQE's byte-blind coalescing, never a ceiling on big streams);
     //    numShufflePartitions/2 keeps a conf-proportional floor for
     //    deployments whose pair streams genuinely need thousands of
-    //    partitions. GRAFT_PAIR_FANOUT overrides for A/B measurement
-    //    (GRAFT_CC_FANIN precedent).
+    //    partitions. GRAFT_PAIR_FANOUT overrides for A/B measurement.
     val spark2 = blocks.sparkSession
     val nParts = sys.env.get("GRAFT_PAIR_FANOUT").map(_.toInt).getOrElse(
       math.max(spark2.sparkContext.defaultParallelism,

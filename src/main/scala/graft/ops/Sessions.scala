@@ -31,10 +31,10 @@ import org.apache.spark.sql.SparkSession
  *    CPU. Shuffle bytes are the binding resource on instance disks and on
  *    this memory-bandwidth-capped guest alike.
  *  - `spark.driver.maxResultSize=4g`: the CC local finish collects up to
- *    [[graft.cluster.ConnectedComponents.localFinishEdges]] thin pairs
- *    (≲ 250 MB of url pairs at the 2M default, far less with 128-bit hash
- *    ids) and the ANN top-up collects bounded query chunks; a run near
- *    those budgets must not die on the 1g default ceiling.
+ *    2M thin pairs (graft.cluster.ConnectedComponents' fixed driver budget;
+ *    ≲ 250 MB of url pairs, far less with 128-bit hash ids) and the ANN
+ *    top-up collects bounded query chunks; a run near those budgets must
+ *    not die on the 1g default ceiling.
  */
 object Sessions {
 

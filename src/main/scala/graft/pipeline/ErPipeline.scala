@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.block.Blocking
@@ -21,53 +21,50 @@ import graft.score.PairScorer
  * `runCheckpointed` commits each stage as a snapshot table with manifest +
  * lineage counters and resumes any completed stage (north-rule contract).
  *
- * ID DISCIPLINE (`Config.hashIds`, default on): the hot path — block-key
- * explode, pair generation, pair dedup, both attach joins, edge set, CC
- * node ids — shuffles 128-bit hash ids (STRUCT<h1,h2>, 16 bytes; collision
- * math at [[graft.functions.GraftFunctions.id128]]) instead of url strings
- * (~60-80 bytes + offsets). Every one of those stages shuffles each doc's
- * id b+|mention| times, so id width is a first-order term in total shuffle
+ * ID DISCIPLINE: the hot path — block-key explode, pair generation, pair
+ * dedup, both attach joins, edge set, CC node ids — shuffles 128-bit hash
+ * ids (STRUCT<h1,h2>, 16 bytes; collision math at
+ * [[graft.functions.GraftFunctions.id128]]) instead of url strings (~60-80
+ * bytes + offsets). Every one of those stages shuffles each doc's id
+ * b+|mention| times, so id width is a first-order term in total shuffle
  * bytes — and on a memory-bandwidth-bound executor, bytes are wall-clock.
  * Urls are hashed in once (a pure expression over the cached feature scan,
- * no join) and restored once at output ([[relabelMinUrl]]), which also
- * restores the string path's exact labeling contract: cluster_id = the
- * component's lexicographic minimum url. The two paths produce IDENTICAL
- * (url, cluster_id) output (property-tested in ErPipelineSpec), so
- * `hashIds = false` survives only as the A/B baseline and oracle for that
- * test.
+ * no join) and restored once at output ([[clusterByMinUrl]]), which labels
+ * every cluster by its lexicographic minimum url — the same labels
+ * [[incremental]] produces over url-keyed state (property-tested in
+ * ErPipelineSpec against a driver-side union-find over url-keyed edges).
  */
 object ErPipeline {
 
+  /** `fingerprint` is the whole config as its case-class string, so every
+    * field that changes stage output is in it and a resume never reuses a
+    * stage built under a different config. */
   case class Config(
       blocking: Blocking.Config = Blocking.Config(),
-      scorer: PairScorer.Config = PairScorer.Config(),
-      hashIds: Boolean = true) {
-    def fingerprint: String =
-      s"b=${blocking.bands}x${blocking.rowsPerBand},mh=${blocking.minhashHashes}," +
-        s"seed=${blocking.seed},cap=${blocking.maxBlock},sn=${blocking.snWindow}," +
-        s"w=${scorer.weights.jaro}/${scorer.weights.lev}/${scorer.weights.jaccard}," +
-        s"tau=${scorer.threshold},jfloor=${scorer.jaccardFloor}," +
-        s"ids=${if (hashIds) "h128" else "url"}"
+      scorer: PairScorer.Config = PairScorer.Config()) {
+    def fingerprint: String = toString
   }
 
-  /** (url, …, cluster_id: 128-bit struct) → (url, cluster_id: url): label
-    * every hash-id component by its minimum member url — bit-identical to
-    * the string-id path's deterministic labeling. Two thin shuffles at
-    * OUTPUT scale (one map-side-combined min per component + one join of
-    * the n-row assignment against the per-component labels), paid once —
-    * versus the id-width savings paid on every hot-path shuffle. */
-  private def relabelMinUrl(assigned: DataFrame): DataFrame = {
+  /** Close the id-space `edges` over every page url (hashed to its 128-bit
+    * node id) and label each component by its minimum member url:
+    * (url, cluster_id: url). The relabel is two thin shuffles at OUTPUT
+    * scale (one map-side-combined min per component + one join of the
+    * n-row assignment against the per-component labels), paid once —
+    * versus the id-width savings paid on every hot-path shuffle.
+    * edgesCanonical: candidatePairs ends in a canonical-order
+    * dropDuplicates, attachFeatures joins one feature row per id, and
+    * scoring only filters — the edge set reaches CC already distinct with
+    * no self-loops, so CC's defensive distinct (a full extra exchange of
+    * the edge set, guide §2.4) is skipped. */
+  private def clusterByMinUrl(pages: DataFrame, edges: DataFrame): DataFrame = {
+    val nodes = pages.select(col("url"), id128(col("url")).as("nid"))
+    val assigned = ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
+      edgesCanonical = true)
     val labels = assigned.groupBy(col("cluster_id"))
       .agg(min(col("url")).as("cluster_url"))
     assigned.join(labels, Seq("cluster_id"))
       .select(col("url"), col("cluster_url").as("cluster_id"))
   }
-
-  /** Re-key a feature table (url, mention, sig, …) to 128-bit hash ids —
-    * a narrow projection (no join); consumers see the same `url` column
-    * name with the 16-byte struct in it. */
-  private def hashKeyed(feats: DataFrame): DataFrame =
-    feats.withColumn("url", id128(col("url")))
 
   /** pages → (url, cluster_id). `feats` is consumed twice (block keys and
     * scorer payload) and its computation — extraction, normalization,
@@ -90,37 +87,23 @@ object ErPipeline {
     // cache (Blocking.features), which genuinely consumes the arrays twice.
     val featsU = scope.cache(Blocking.features(pages, cfg.blocking, Some(scope))
       .select(col("url"), col("mention"), col("sig")))
-    // edgesCanonical: candidatePairs ends in a canonical-order
-    // dropDuplicates, attachFeatures joins one feature row per url, and
-    // scoring only filters — the edge set reaches CC already distinct with
-    // no self-loops, so CC's defensive distinct (a full extra exchange of
-    // the edge set, guide §2.4) is skipped.
-    val out = if (cfg.hashIds) {
-      val feats = hashKeyed(featsU)
-      val blocks = Blocking.blockKeys(feats, cfg.blocking)
-      val pairs = Blocking.candidatePairs(blocks, cfg.blocking)
-      val edges = PairScorer.score(Blocking.attachFeatures(pairs, feats), cfg.scorer)
-      val nodes = pages.toDF().select(col("url"), id128(col("url")).as("nid"))
-      relabelMinUrl(ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
-        edgesCanonical = true))
-    } else {
-      val blocks = Blocking.blockKeys(featsU, cfg.blocking)
-      val pairs = Blocking.candidatePairs(blocks, cfg.blocking)
-      val edges = PairScorer.score(Blocking.attachFeatures(pairs, featsU), cfg.scorer)
-      ConnectedComponents.assignAll(pages.toDF().select("url"), edges,
-        edgesCanonical = true)
-    }
+    // re-keyed to 128-bit ids by a narrow projection (no join); consumers
+    // see the same `url` column name with the 16-byte struct in it
+    val feats = featsU.withColumn("url", id128(col("url")))
+    val blocks = Blocking.blockKeys(feats, cfg.blocking)
+    val pairs = Blocking.candidatePairs(blocks, cfg.blocking)
+    val edges = PairScorer.score(Blocking.attachFeatures(pairs, feats), cfg.scorer)
+    val out = clusterByMinUrl(pages.toDF(), edges)
     scope.close()
     out
   }
 
   /** Checkpointed variant: every stage is a committed snapshot (resume-safe;
-    * the fingerprint carries the id discipline so a resume never mixes url-
-    * and hash-keyed artifacts). Feature/pair/edge snapshots live in id space
-    * — on the hash path the features snapshot keeps BOTH the url and the
-    * derived id column, so downstream consumers (e.g. Main's candidate-miss
+    * see [[Config]] for the fingerprint). Feature/pair/edge snapshots live
+    * in id space — the features snapshot keeps BOTH the url and the derived
+    * id column, so downstream consumers (e.g. Main's candidate-miss
     * diagnostics) can translate pair snapshots back to urls with one
-    * broadcast-or-shuffle join against it. */
+    * broadcast-or-shuffle join against it ([[pairsToUrls]]). */
   def runCheckpointed(spark: SparkSession, pages: Dataset[Page], workDir: String,
                       cfg: Config = Config()): DataFrame = {
     val fp = cfg.fingerprint
@@ -131,16 +114,14 @@ object ErPipeline {
     Lineage.writeCounters(s"$workDir/pages", "pages", pagesT)
 
     val feats = Checkpoints.stage(spark, s"$workDir/features", "features", fp) {
-      val f = Blocking.features(
-        pagesT.as[Page](org.apache.spark.sql.Encoders.product[Page]), cfg.blocking)
-      if (cfg.hashIds) f.withColumn("nid", id128(col("url"))) else f
+      Blocking.features(
+          pagesT.as[Page](org.apache.spark.sql.Encoders.product[Page]), cfg.blocking)
+        .withColumn("nid", id128(col("url")))
     }
     Lineage.writeCounters(s"$workDir/features", "features", feats)
 
     // id-space view of the features snapshot (url dropped, nid as the key)
-    val featsKeyed =
-      if (cfg.hashIds) feats.drop("url").withColumnRenamed("nid", "url")
-      else feats
+    val featsKeyed = feats.drop("url").withColumnRenamed("nid", "url")
 
     val pairs = Checkpoints.stage(spark, s"$workDir/pairs", "pairs", fp) {
       Blocking.candidatePairs(Blocking.blockKeys(featsKeyed, cfg.blocking), cfg.blocking)
@@ -153,14 +134,7 @@ object ErPipeline {
     Lineage.writeCounters(s"$workDir/edges", "edges", edges)
 
     val clusters = Checkpoints.stage(spark, s"$workDir/clusters", "clusters", fp) {
-      // edgesCanonical: same argument as [[run]] — the pairs stage ends in
-      // a canonical dropDuplicates and scoring only filters
-      if (cfg.hashIds) {
-        val nodes = pagesT.select(col("url"), id128(col("url")).as("nid"))
-        relabelMinUrl(ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
-          edgesCanonical = true))
-      } else ConnectedComponents.assignAll(pagesT.select("url"), edges,
-        edgesCanonical = true)
+      clusterByMinUrl(pagesT, edges)
     }
     Lineage.writeCounters(s"$workDir/clusters", "clusters", clusters)
     clusters
@@ -275,17 +249,13 @@ object ErPipeline {
 
   /** Translate an id-space pair table (url_a, url_b as 128-bit structs)
     * back to url strings via the features snapshot's (url, nid) columns —
-    * for diagnostics over checkpointed pair/edge artifacts. No-op input
-    * passes through when the pairs are already strings. */
+    * for diagnostics over checkpointed pair/edge artifacts. */
   def pairsToUrls(pairs: DataFrame, feats: DataFrame): DataFrame = {
-    if (pairs.schema("url_a").dataType == org.apache.spark.sql.types.StringType) pairs
-    else {
-      val dict = feats.select(col("nid"), col("url"))
-      pairs
-        .join(dict.select(col("nid").as("url_a"), col("url").as("ua")), Seq("url_a"))
-        .join(dict.select(col("nid").as("url_b"), col("url").as("ub")), Seq("url_b"))
-        .select(col("ua").as("url_a"), col("ub").as("url_b"))
-    }
+    val dict = feats.select(col("nid"), col("url"))
+    pairs
+      .join(dict.select(col("nid").as("url_a"), col("url").as("ua")), Seq("url_a"))
+      .join(dict.select(col("nid").as("url_b"), col("url").as("ub")), Seq("url_b"))
+      .select(col("ua").as("url_a"), col("ub").as("url_b"))
   }
 
   /** Convenience: run + evaluate against labeled pairs. */

@@ -25,7 +25,13 @@ import graft.schema.MatchEdge
  */
 object PairScorer {
 
-  case class Weights(jaro: Double = 0.3, lev: Double = 0.1, jaccard: Double = 0.6)
+  /** Non-negative by contract: [[score]]'s bound gate replaces lev_sim by
+    * its maximum 1.0 to get an upper bound of the score, which holds only
+    * while every weight is ≥ 0. */
+  case class Weights(jaro: Double = 0.3, lev: Double = 0.1, jaccard: Double = 0.6) {
+    require(jaro >= 0 && lev >= 0 && jaccard >= 0,
+      s"scorer weights must be non-negative, got jaro=$jaro lev=$lev jaccard=$jaccard")
+  }
 
   /**
    * `threshold` gates the weighted score; `jaccardFloor` is a CONJUNCTIVE

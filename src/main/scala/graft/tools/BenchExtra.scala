@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -16,6 +18,10 @@ import org.apache.spark.sql.SparkSession
  *
  * Usage: BenchExtra <sfDir> [rounds] [cores] [names,csv|all]
  * Output: one MIN line per query + a final JSON-ish summary line.
+ *
+ * A query that throws is never timed again: it is reported on stderr,
+ * left out of the MIN lines and `total_min`, listed under `"failed"` in
+ * the summary, and makes the tool exit non-zero.
  */
 object BenchExtra {
   private def canarySec(): Double = {
@@ -70,28 +76,42 @@ object BenchExtra {
         case n => graft.SparkEntry.queries(n)
       }
 
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    /** Runs query `n` to completion; false (and `n` marked failed) if it threw. */
+    def completes(n: String): Boolean =
+      try { fn(n)(spark, sfDir).count(); true }
+      catch {
+        case NonFatal(e) =>
+          failed += n
+          System.err.println(s"[bench-extra] FAILED $n: $e")
+          false
+      }
+
     // warm-up pass (JIT + codegen), untimed
-    names.foreach { n => try fn(n)(spark, sfDir).count() catch { case _: Throwable => () } }
+    names.foreach(completes)
 
     val samples = scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     val canaries = scala.collection.mutable.ArrayBuffer.empty[Double]
     (1 to rounds).foreach { r =>
       val c = canarySec()
       canaries += c
-      names.foreach { n =>
+      names.filterNot(failed).foreach { n =>
         val t0 = System.nanoTime()
-        try fn(n)(spark, sfDir).count() catch { case _: Throwable => () }
-        val sec = (System.nanoTime() - t0) / 1e9
-        samples(n) = sec :: samples(n)
-        System.err.println(f"[bench-extra] round=$r canary=$c%.2f $n $sec%.3f")
+        if (completes(n)) {
+          val sec = (System.nanoTime() - t0) / 1e9
+          samples(n) = sec :: samples(n)
+          System.err.println(f"[bench-extra] round=$r canary=$c%.2f $n $sec%.3f")
+        }
       }
     }
-    val mins = names.map(n => n -> samples(n).min)
+    val mins = names.filterNot(failed).map(n => n -> samples(n).min)
     mins.foreach { case (n, m) => println(f"MIN $n $m%.3f") }
     val total = mins.map(_._2).sum
     val qjson = mins.map { case (n, m) => f""""$n":$m%.3f""" }.mkString("{", ",", "}")
+    val fjson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val cjson = canaries.map(c => f"$c%.2f").mkString("[", ",", "]")
-    println(f"""{"metric":"total_min","value":$total%.3f,"unit":"sec","queries":$qjson,"canaries":$cjson,"rounds":$rounds,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total_min","value":$total%.3f,"unit":"sec","queries":$qjson,"failed":$fjson,"canaries":$cjson,"rounds":$rounds,"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -10,12 +10,10 @@ import graft.pipeline.ErPipeline
  * 100×-scale dress rehearsal (BASELINE.md): one multi-million-document run
  * of the flagship ER pipeline plus the full-strength MinHash near-dup
  * pipeline at local[32], with the telemetry the 100 TB design claims rest
- * on — wall clock, per-stage and total shuffle volume, and the CC loop's
- * per-iteration edge counts / partition sizing (set GRAFT_CC_VERBOSE=1 to
- * stream those). At ≥3M docs the scored edge set (~2.4M+ edges) exceeds the
- * CC local-finish budget, so the distributed star rounds — the code path a
- * real cluster would spend its time in — actually execute, unlike at bench
- * scale.
+ * on — wall clock, per-stage and total shuffle volume. At ≥3M docs the
+ * scored edge set (~2.4M+ edges) exceeds the CC local-finish budget, so
+ * the distributed star rounds — the code path a real cluster would spend
+ * its time in — actually execute, unlike at bench scale.
  *
  *   DressRehearsal [nDocs=3000000] [cores=32] [corpusDir]
  *

@@ -37,6 +37,13 @@ import graft.pipeline.ErPipeline
  * reported N→4N efficiency (conservative direction). Both points get the
  * same heap (the 4N point's sizing) — extra memory for the low-core
  * baseline again only makes it faster, i.e. conservative.
+ *
+ * Why small file splits (the rationale graft.Bench's session config cites
+ * for its 8 MB `maxPartitionBytes`; the sizing for this suite is at the
+ * session builder below): test corpora are tiny next to the default 128 MB
+ * split size — a 60-220 MB corpus would coalesce to 1-3 scan partitions and
+ * run the whole map side on 3 of N cores. A real cluster job over 100 TB
+ * has millions of natural splits; small splits here recreate that shape.
  */
 object ScalingSuite {
 

@@ -80,8 +80,8 @@ class ConnectedComponentsSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap)
 
     // same edges keyed by STRUCT<h1,h2> hash ids, through BOTH code paths
-    // (driver union-find over Row keys; distributed star rounds over struct
-    // columns — window min / least / xxhash64 checksum on structs)
+    // (driver union-find over (hi, lo) longs; distributed star rounds over
+    // struct columns — window min / least / xxhash64 checksum on structs)
     val hdf = edgeDf.select(id128(col("url_a")).as("url_a"), id128(col("url_b")).as("url_b"))
     val dict = edgeDf.select(col("url_a").as("url")).union(edgeDf.select(col("url_b").as("url")))
       .distinct().select(col("url"), id128(col("url")).as("nid"))
@@ -93,6 +93,15 @@ class ConnectedComponentsSpec extends SparkSpec {
       assert(got == want, s"budget $budget: struct-id partition diverged")
     }
     edgeDf.unpersist()
+  }
+
+  test("Long-typed node ids are rejected, naming the type") {
+    // only the two id disciplines in use have a local finish: STRING urls
+    // and STRUCT<long,long> hashes
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("url_a", "url_b")
+    val e = intercept[IllegalArgumentException](ConnectedComponents.run(edges))
+    assert(e.getMessage.contains("bigint"), e.getMessage)
   }
 
   test("empty edges, singletons via assignAll") {

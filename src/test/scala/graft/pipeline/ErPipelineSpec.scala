@@ -66,20 +66,65 @@ class ErPipelineSpec extends SparkSpec {
     p3.unpersist(); g3.unpersist()
   }
 
-  test("hash-id path ≡ string-id path: identical (url, cluster_id) output") {
-    // the 128-bit-id hot path (Config.hashIds, the production default) must
-    // not change SEMANTICS, only shuffle bytes: same candidate pairs (the
-    // SN tiebreak is id128(id) on both paths by construction), same edges,
-    // same components, and — via relabelMinUrl — the exact same min-url
-    // cluster labels. Exact multiset equality, not just partition equality.
+  test("run ≡ driver-side union-find over url-keyed layer edges") {
+    // the 128-bit-id pipeline must not change SEMANTICS, only shuffle
+    // bytes: the same layers keyed on url strings (the SN tiebreak is
+    // id128(id) under both keyings by construction) give the same edges,
+    // and closing those on the driver, each component labeled by its
+    // minimum url and each edgeless doc by itself, must give the exact
+    // (url, cluster_id) multiset — not just the same partition.
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
     val p2 = CorpusGen.pages(spark, 20000L, seed = 99L).cache()
-    val viaHash = ErPipeline.run(p2, ErPipeline.Config(hashIds = true))
-    val viaUrl = ErPipeline.run(p2, ErPipeline.Config(hashIds = false))
-    val onlyHash = viaHash.exceptAll(viaUrl).count()
-    val onlyUrl = viaUrl.exceptAll(viaHash).count()
-    assert(onlyHash == 0 && onlyUrl == 0,
-      s"id disciplines diverged: $onlyHash rows only in hash path, $onlyUrl only in url path")
-    p2.unpersist()
+    val cfg = ErPipeline.Config()
+    val feats = Blocking.features(p2, cfg.blocking)
+      .select(col("url"), col("mention"), col("sig")).cache()
+    val pairs = Blocking.candidatePairs(Blocking.blockKeys(feats, cfg.blocking), cfg.blocking)
+    val edges = PairScorer.score(Blocking.attachFeatures(pairs, feats), cfg.scorer)
+      .select("url_a", "url_b").as[(String, String)].collect()
+    // union-find whose root is always the component's minimum url
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(u: String): String = {
+      val p = parent.getOrElse(u, u)
+      if (p == u) u else { val r = find(p); parent(u) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val want = p2.select("url").as[String].collect().map(u => (u, find(u))).sorted.toSeq
+    val got = ErPipeline.run(p2, cfg).as[(String, String)].collect().sorted.toSeq
+    assert(edges.length > 1000 && want.count(w => w._1 != w._2) > 1000,
+      s"oracle too thin to compare: ${edges.length} edges")
+    assert(got.length == want.length, s"${got.length} rows vs ${want.length} pages")
+    val diff = got.zip(want).count { case (g, w) => g != w }
+    assert(diff == 0, s"$diff of ${want.length} (url, cluster_id) rows differ from the oracle")
+    feats.unpersist(); p2.unpersist()
+  }
+
+  test("runCheckpointed recomputes features after a blocking-config change") {
+    // every config field is in the fingerprint: a changed DF-stop ratio
+    // must rebuild the features stage, not resume the stale snapshot
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-er-ckpt").toString
+    val p = CorpusGen.pages(spark, 400L, seed = 5L).cache()
+    val cfg1 = ErPipeline.Config()
+    val cfg2 = ErPipeline.Config(blocking = Blocking.Config(dfStopRatio = 1.0))
+    def sigs(f: org.apache.spark.sql.DataFrame) = f.select(col("url"), col("sig"))
+    val fresh1 = sigs(Blocking.features(p, cfg1.blocking))
+    val fresh2 = sigs(Blocking.features(p, cfg2.blocking))
+    assert(fresh2.exceptAll(fresh1).count() > 0, "the two configs must yield different features")
+
+    val featsDir = s"$dir/features"
+    ErPipeline.runCheckpointed(spark, p, dir, cfg1).count()
+    assert(graft.ops.Checkpoints.manifestExists(featsDir, cfg1.fingerprint))
+    ErPipeline.runCheckpointed(spark, p, dir, cfg2).count()
+    assert(graft.ops.Checkpoints.manifestExists(featsDir, cfg2.fingerprint),
+      "features stage resumed under a stale config")
+    val snap = sigs(spark.read.parquet(s"$featsDir/data"))
+    assert(snap.exceptAll(fresh2).count() == 0 && fresh2.exceptAll(snap).count() == 0,
+      "features snapshot is not the new config's features")
+    p.unpersist()
   }
 
   test("batch-incremental ER ≡ full rebuild on corpus ∪ batch") {
@@ -87,8 +132,7 @@ class ErPipelineSpec extends SparkSpec {
     // corpus-independent features (DF-stops off) + all-pairs blocking
     // regime: the exact-equivalence precondition incremental() documents
     val cfg = ErPipeline.Config(
-      blocking = Blocking.Config(dfStopRatio = 1.0, maxBlock = 4096),
-      hashIds = false)
+      blocking = Blocking.Config(dfStopRatio = 1.0, maxBlock = 4096))
     val all = CorpusGen.pages(spark, 1200L, seed = 7L).cache()
     // deterministic split: ~1/4 of docs arrive as the new batch — some are
     // clone-cluster members whose siblings are in the old corpus (edges into
@@ -154,6 +198,14 @@ class ErPipelineSpec extends SparkSpec {
         col("a.cluster_id") === col("b.cluster_id"))
       .count()
     assert(paired == 200L, s"only $paired/200 clone pairs share a cluster")
+  }
+
+  test("scorer weights must be non-negative") {
+    // score()'s jaro-bound gate is an upper bound of the score only while
+    // every weight is >= 0
+    val e = intercept[IllegalArgumentException](PairScorer.Weights(lev = -0.1))
+    assert(e.getMessage.contains("non-negative"))
+    assert(PairScorer.Weights(jaro = 0.0).jaro == 0.0)
   }
 
   test("scorer: expression path == typed mapPartitions path") {
