@@ -29,8 +29,16 @@ object SparkEntry {
     * SPARK-23207) and every consumer below is row-order independent. */
   private def tSpread(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(spark, dir, name)
-    val small = new java.io.File(s"$dir/$name.parquet").length < 64L * 1024 * 1024
+    val small = pathBytes(spark, s"$dir/$name.parquet") < 64L * 1024 * 1024
     if (small) df.repartition(spark.sessionState.conf.numShufflePartitions) else df
+  }
+
+  /** Bytes stored under `path`: a single file's length, or the sum over a
+    * directory's files (a Spark-written parquet is a directory of part
+    * files, whose own `File.length` is the inode size, ~4 KB). */
+  private[graft] def pathBytes(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
   }
 
   /** Deterministically-messy urls planted from doc_id for the url queries:
@@ -947,6 +955,16 @@ object SparkEntry {
       cluster.ConnectedComponents.incremental(assignment, delta)
         .select(col("url").cast("bigint").as("id"), col("cluster_id").cast("bigint").as("comp"))
     }))
+
+  /** Full-strength near-dup stress passes over [[docsWithClones]], timed by
+    * `graft.Bench` after the headline queries. Their outputs are
+    * data-dependent pair sets with no DuckDB replica, so they stay out of
+    * the oracle-gated [[queries]]. */
+  def stress: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "dedup_minhash_full" -> ((s, dir) =>
+      dedup.Dedup.minhashNearDupGroups(docsWithClones(s, dir), "doc_id", "text")),
+    "dedup_simhash_full" -> ((s, dir) =>
+      dedup.Dedup.simhashNearDupPairs(docsWithClones(s, dir), "doc_id", "text")))
 
   /** DuckDB-equivalent SQL per oracle-checked query (column names match). */
   /**

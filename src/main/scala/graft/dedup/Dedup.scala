@@ -514,11 +514,10 @@ object Dedup {
     //    AQE's byte-blind coalescing, never a ceiling on big streams);
     //    numShufflePartitions/2 keeps a conf-proportional floor for
     //    deployments whose pair streams genuinely need thousands of
-    //    partitions. GRAFT_PAIR_FANOUT overrides for A/B measurement.
+    //    partitions.
     val spark2 = blocks.sparkSession
-    val nParts = sys.env.get("GRAFT_PAIR_FANOUT").map(_.toInt).getOrElse(
-      math.max(spark2.sparkContext.defaultParallelism,
-        spark2.sessionState.conf.numShufflePartitions / 2))
+    val nParts = math.max(spark2.sparkContext.defaultParallelism,
+      spark2.sessionState.conf.numShufflePartitions / 2)
     val smallAll = withN
       .filter($"n".between(2, cap))
       .groupBy($"key").agg(collect_list($"p").as("members"))

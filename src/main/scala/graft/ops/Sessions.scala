@@ -6,6 +6,15 @@ import org.apache.spark.sql.SparkSession
  * Shared SparkSession configuration for every production entry point (Main,
  * Bench, Verify, ScalingSuite, DressRehearsal).
  *
+ * Two sizing recipes sit on top of [[builder]], each kept as data so
+ * SessionsSpec can pin it:
+ *  - [[bench]]: the `graft.Bench` headline-query session, used by
+ *    `tools/BenchExtra` and by `tools/Inspect` for query targets. Bench
+ *    itself keeps a frozen literal copy (the measurement contract).
+ *  - [[scaling]]: the north-rule ER scaling session, used by
+ *    `tools/ScalingSuite` (Bench's scaling child) and by `tools/Inspect`
+ *    for the `er` target.
+ *
  * `survival` carries the settings the 100×-scale dress rehearsal proved
  * necessary (BASELINE.md "failure→fix lessons") — they used to live only in
  * the rehearsal tool, which meant the library's own sessions would re-hit
@@ -85,4 +94,66 @@ object Sessions {
       if (sys.props.get("spark.master").exists(_.nonEmpty)) base
       else base.master(s"local[$cores]"))
   }
+
+  private val MB = 1024L * 1024
+
+  /** The settings `graft.Bench.session` applies at `cores` cores. Bench keeps
+    * its own frozen copy, which also carries the reasons. */
+  def benchConfigs(cores: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> (cores * 2).toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> (32 * MB).toString,
+    "spark.sql.files.maxPartitionBytes" -> (8 * MB).toString,
+    "spark.sql.files.openCostInBytes" -> (512L * 1024).toString,
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * MB).toString,
+    "spark.local.dir" -> "/dev/shm/graft-spark")
+
+  /** [[builder]] plus [[benchConfigs]]. */
+  def bench(cores: Int, appName: String): SparkSession.Builder =
+    builder(cores, appName).config(benchConfigs(cores))
+
+  /** The north-rule scaling job's settings at `shufflePartitions` shuffle
+    * partitions (see tools/ScalingSuite for why that count is one value
+    * across core counts). */
+  def scalingConfigs(shufflePartitions: Int): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    // 32 MB, NOT the round-2 128 MB: at ≥300k docs the feature table's
+    // ESTIMATED size still fit 128 MB, so the attach joins planned as
+    // broadcasts whose real deserialized build is ~1 GB — a
+    // single-threaded driver-side stall that ate minutes of the
+    // scaling points. A shuffle join is the correct plan at that size.
+    "spark.sql.autoBroadcastJoinThreshold" -> (32 * MB).toString,
+    // split size trades scan balance against TASK-DISPATCH FLOOR: the
+    // cached feature table inherits the scan's partition count, and
+    // stage telemetry at 900k docs showed ~9 downstream branch/AQE
+    // stages re-scanning that cache NEAR-EMPTY (288 tasks each at 8 MB
+    // splits ≈ 2.6k dispatched no-op tasks ≈ 5 s of driver-serial
+    // floor, paid identically at every core count — exactly what the
+    // N-vs-4N ratio is capped by). 32 MB → ~72 splits on the 2.3 GB
+    // rule corpus: still 9 waves at 8 cores (the graded pair), one
+    // fewer order of dispatch floor. A real 100 TB input has millions
+    // of natural splits — split COUNT there is data-sized, and the
+    // per-consumer dispatch cost amortizes over real bytes per task.
+    "spark.sql.files.maxPartitionBytes" -> (32 * MB).toString,
+    "spark.sql.files.openCostInBytes" -> (512L * 1024).toString,
+    // hash joins over sort-merge where a side fits per-partition
+    // memory: the attach/score joins shuffle ~1M+ rows whose sort adds
+    // CPU at every point; SHJ skips both sorts (same answer, same
+    // shuffle keys)
+    "spark.sql.join.preferSortMergeJoin" -> "false",
+    // finer post-shuffle targets keep CPU-heavy reduce stages at full
+    // parallelism even when AQE coalesces by size
+    // 16 MB kept after an A/B at 8 (theory said finer bins fix the
+    // 12-task scoring stage's 8+4 wave at 8 cores; measurement said
+    // the 2-core side sped up MORE — interleaved clean pairs read
+    // eff 0.75 @16 MB vs 0.68 @8 MB at 150k docs, both within host
+    // weather but consistently ordered).
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * MB).toString,
+    "spark.local.dir" -> "/tmp/graft-spark-local")
+
+  /** [[builder]] plus [[scalingConfigs]]. */
+  def scaling(cores: Int, shufflePartitions: Int, appName: String): SparkSession.Builder =
+    builder(cores, appName).config(scalingConfigs(shufflePartitions))
 }

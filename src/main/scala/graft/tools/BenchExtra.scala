@@ -2,8 +2,6 @@ package graft.tools
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Weather-robust per-query measurement (guide §1: measure first, and on
  * this host measure PAST the Firecracker throttle cycles): times the named
@@ -50,36 +48,14 @@ object BenchExtra {
       if (args.length > 3 && args(3) != "all") args(3).split(',').map(_.trim).toSeq
       else headline
 
-    val spark = graft.ops.Sessions.builder(cores, "graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", (cores * 2).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
+    val spark = graft.ops.Sessions.bench(cores, "graft-bench-extra").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    def clones(s: SparkSession, dir: String) = {
-      import org.apache.spark.sql.functions.col
-      val d = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
-      d.unionByName(d.withColumn("doc_id", col("doc_id") + 1000000))
-    }
-    def fn(name: String): (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      name match {
-        case "dedup_minhash_full" =>
-          (s, dir) => graft.dedup.Dedup.minhashNearDupGroups(clones(s, dir), "doc_id", "text")
-        case "dedup_simhash_full" =>
-          (s, dir) => graft.dedup.Dedup.simhashNearDupPairs(clones(s, dir), "doc_id", "text")
-        case n => graft.SparkEntry.queries(n)
-      }
+    val targets = graft.SparkEntry.queries ++ graft.SparkEntry.stress
 
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     /** Runs query `n` to completion; false (and `n` marked failed) if it threw. */
     def completes(n: String): Boolean =
-      try { fn(n)(spark, sfDir).count(); true }
+      try { targets(n)(spark, sfDir).count(); true }
       catch {
         case NonFatal(e) =>
           failed += n

@@ -1,0 +1,234 @@
+package graft.tools
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.SparkEntry
+import graft.ops.Sessions
+import graft.pipeline.ErPipeline
+import graft.schema.Page
+
+/**
+ * One inspector for the engine's queries and its ER job:
+ *
+ *   Inspect profile <dir> <target> [runs=2] [cores=8]
+ *   Inspect explain <dir> <outDir> <targets,csv> [cores=8]
+ *   Inspect show    <dir> <target> [cores=8]
+ *
+ * A target is a [[graft.SparkEntry.queries]] or [[graft.SparkEntry.stress]]
+ * name, read from the sf directory `<dir>` under the
+ * [[graft.ops.Sessions.bench]] session, or `er`: [[ErPipeline.run]] over the
+ * page-parquet corpus at `<dir>` (e.g. one written by `tools/GenCorpus`)
+ * under the [[graft.ops.Sessions.scaling]] session with 2×cores shuffle
+ * partitions, the partition count ScalingSuite gives a single-size run.
+ *
+ *  - `profile` counts the target `runs` times and reports the
+ *    LAST (warm) run: every job with its wall and the driver-side gaps
+ *    between jobs (planning, collects, broadcast builds), and every stage
+ *    with start/end offsets from the run start, wall, summed task run time,
+ *    CPU, GC, tasks, shuffle read/write and the physical operator names
+ *    (rdd scopes, which AQE hides from stage call sites). Every graft
+ *    session runs with the Spark UI off; this is its replacement.
+ *  - `explain` writes `<outDir>/<target>.txt` per target: the formatted
+ *    plan, then the final plan of every query execution that building and
+ *    counting the target ran — including eager-checkpoint interiors, which
+ *    the formatted plan cannot show (the `plans/rNN/` records).
+ *  - `show` prints the first 50 rows and the wall.
+ */
+object Inspect {
+
+  val ErTarget = "er"
+
+  private def targets: Map[String, (SparkSession, String) => DataFrame] =
+    SparkEntry.queries ++ SparkEntry.stress + (ErTarget -> ((s: SparkSession, dir: String) =>
+      ErPipeline.run(s.read.parquet(dir).as[Page](Encoders.product[Page]))))
+
+  /** The target named `name`; unknown names fail listing every valid one. */
+  private def target(name: String): (SparkSession, String) => DataFrame =
+    targets.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown target '$name'; valid targets: ${targets.keys.toSeq.sorted.mkString(", ")}"))
+
+  /** Epoch-ms times; `endMs` is -1 when no end event arrived. */
+  final case class Job(id: Int, startMs: Long, endMs: Long, stages: Int, tasks: Int,
+                       site: String)
+  final case class Stage(id: Int, startMs: Long, endMs: Long, tasks: Int, runMs: Long,
+                         cpuNs: Long, gcMs: Long, shuffleReadBytes: Long,
+                         shuffleWriteBytes: Long, ops: String)
+  /** `rows` and the jobs and stages are the last run's; `startMs` is when it
+    * began. */
+  final case class Profile(rows: Long, seconds: Seq[Double], startMs: Long,
+                           jobs: Seq[Job], stages: Seq[Stage])
+
+  /** Job property marking the jobs a [[Recorder]] keeps. */
+  private val RunKey = "graft.inspect.run"
+
+  /** Records the jobs carrying `RunKey = tag`, and their completed stages. */
+  private final class Recorder(tag: String) extends SparkListener {
+    val jobs = new ConcurrentHashMap[Int, Job]()
+    val stages = new ConcurrentHashMap[Int, Stage]()
+    private val stageIds = ConcurrentHashMap.newKeySet[Int]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty(RunKey) == tag)) {
+        val site = Option(e.properties.getProperty("callSite.short"))
+          .orElse(e.stageInfos.sortBy(-_.stageId).headOption.map(_.name))
+          .getOrElse("?")
+        jobs.put(e.jobId, Job(e.jobId, e.time, -1L, e.stageInfos.size,
+          e.stageInfos.map(_.numTasks).sum, site.take(90)))
+        e.stageIds.foreach(stageIds.add)
+      }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      jobs.computeIfPresent(e.jobId, (_, j) => j.copy(endMs = e.time))
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      if (stageIds.contains(si.stageId) && m != null) {
+        val ops = si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct.mkString(">")
+        stages.put(si.stageId, Stage(si.stageId, si.submissionTime.getOrElse(-1L),
+          si.completionTime.getOrElse(-1L), si.numTasks, m.executorRunTime,
+          m.executorCpuTime, m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleWriteMetrics.bytesWritten, ops.take(200)))
+      }
+    }
+  }
+
+  /** Returns once every listener on the shared bus queue has seen the events
+    * posted before the call: a one-task marker job's end event queues behind
+    * them. Fails rather than report a partial record. */
+  private def drain(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val marker = s"drain-${System.nanoTime()}"
+    val done = new CountDownLatch(1)
+    val listener = new SparkListener {
+      @volatile private var markerJob = -1
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(RunKey) == marker)) markerJob = e.jobId
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) done.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(RunKey, marker)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(RunKey, null)
+      if (!done.await(60, TimeUnit.SECONDS))
+        throw new IllegalStateException("listener events did not drain within 60 s")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def profile(spark: SparkSession, dir: String, name: String, runs: Int): Profile = {
+    require(runs >= 1, s"runs must be >= 1 (got $runs)")
+    val run = target(name)
+    val sc = spark.sparkContext
+    val tag = s"warm-${System.nanoTime()}"
+    val rec = new Recorder(tag)
+    sc.addSparkListener(rec)
+    try {
+      var rows = 0L
+      var startMs = 0L
+      val seconds = (1 to runs).map { i =>
+        if (i == runs) {
+          sc.setLocalProperty(RunKey, tag)
+          startMs = System.currentTimeMillis()
+        }
+        val t0 = System.nanoTime()
+        try rows = run(spark, dir).count()
+        finally sc.setLocalProperty(RunKey, null)
+        (System.nanoTime() - t0) / 1e9
+      }
+      drain(spark)
+      Profile(rows, seconds, startMs, rec.jobs.values.asScala.toSeq.sortBy(_.startMs),
+        rec.stages.values.asScala.toSeq.sortBy(s => (s.startMs, s.id)))
+    } finally sc.removeSparkListener(rec)
+  }
+
+  def report(name: String, p: Profile): String = {
+    def off(ms: Long) = if (ms < 0) Double.NaN else (ms - p.startMs) / 1e3
+    def wall(t0: Long, t1: Long) = if (t0 < 0 || t1 < 0) Double.NaN else (t1 - t0) / 1e3
+    val mb = 1024.0 * 1024
+    val out = Seq.newBuilder[String]
+    out += f"PROFILE $name rows=${p.rows} sec=${p.seconds.map(s => f"$s%.2f").mkString(",")}"
+    out += "JOBS of the last run [start-end s from its start]"
+    var prevEnd = -1L
+    p.jobs.foreach { j =>
+      if (prevEnd > 0 && j.startMs - prevEnd > 30)
+        out += f"  GAP  ${(j.startMs - prevEnd) / 1e3}%7.2f s  (driver-side)"
+      out += f"  JOB ${j.id}%4d [${off(j.startMs)}%6.2f-${off(j.endMs)}%6.2f] " +
+        f"${wall(j.startMs, j.endMs)}%6.2f s  stages=${j.stages}%2d tasks=${j.tasks}%5d  ${j.site}"
+      prevEnd = math.max(prevEnd, if (j.endMs > 0) j.endMs else j.startMs)
+    }
+    out += "STAGES of the last run"
+    p.stages.foreach { s =>
+      out += f"  STAGE ${s.id}%4d [${off(s.startMs)}%6.2f-${off(s.endMs)}%6.2f] " +
+        f"wall=${wall(s.startMs, s.endMs)}%6.2f s run=${s.runMs / 1e3}%6.2f s " +
+        f"cpu=${s.cpuNs / 1e9}%6.2f s gc=${s.gcMs / 1e3}%5.2f s tasks=${s.tasks}%4d " +
+        f"sr=${s.shuffleReadBytes / mb}%7.1fMB sw=${s.shuffleWriteBytes / mb}%7.1fMB  ${s.ops}"
+    }
+    out += f"TOTAL jobs=${p.jobs.size} stages=${p.stages.size} " +
+      f"run=${p.stages.map(_.runMs).sum / 1e3}%.2f s cpu=${p.stages.map(_.cpuNs).sum / 1e9}%.2f s"
+    out.result().mkString("\n")
+  }
+
+  def explain(spark: SparkSession, dir: String, outDir: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val run = target(name)
+      val finals = new ConcurrentLinkedQueue[String]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          finals.add(f"== $funcName (${durationNs / 1e9}%.2f s) ==\n${qe.executedPlan}")
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val df = run(spark, dir)
+        val plan = df.queryExecution.explainString(FormattedMode)
+        df.count()
+        drain(spark)
+        val path = Paths.get(outDir, s"$name.txt")
+        Files.writeString(path, plan +
+          "\n== Final plans of the query executions run to build and count it ==\n" +
+          finals.asScala.mkString("\n"))
+        System.err.println(s"[inspect] wrote $path")
+      } finally spark.listenerManager.unregister(listener)
+    }
+  }
+
+  def show(spark: SparkSession, dir: String, name: String): Unit = {
+    val run = target(name)
+    val t0 = System.nanoTime()
+    run(spark, dir).show(50, truncate = false)
+    println(f"[inspect] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+  }
+
+  def main(args: Array[String]): Unit = {
+    def int(i: Int, default: Int) = if (args.length > i) args(i).toInt else default
+    val (names, cores, mode) = args.toSeq match {
+      case Seq("profile", dir, name, _*) => (Seq(name), int(4, 8),
+        (s: SparkSession) => println(report(name, profile(s, dir, name, int(3, 2)))))
+      case Seq("explain", dir, outDir, csv, _*) =>
+        val ns = csv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+        (ns, int(4, 8), (s: SparkSession) => explain(s, dir, outDir, ns))
+      case Seq("show", dir, name, _*) =>
+        (Seq(name), int(3, 8), (s: SparkSession) => show(s, dir, name))
+      case _ =>
+        System.err.println("usage: Inspect profile <dir> <target> [runs] [cores]\n" +
+          "       Inspect explain <dir> <outDir> <targets,csv> [cores]\n" +
+          "       Inspect show <dir> <target> [cores]")
+        sys.exit(2)
+    }
+    names.foreach(target) // unknown names fail before Spark starts
+    val spark = (if (names.contains(ErTarget)) Sessions.scaling(cores, cores * 2, "graft-inspect")
+      else Sessions.bench(cores, "graft-inspect")).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    try mode(spark) finally spark.stop()
+  }
+}

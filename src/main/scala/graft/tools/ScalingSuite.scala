@@ -39,8 +39,8 @@ import graft.pipeline.ErPipeline
  * baseline again only makes it faster, i.e. conservative.
  *
  * Why small file splits (the rationale graft.Bench's session config cites
- * for its 8 MB `maxPartitionBytes`; the sizing for this suite is at the
- * session builder below): test corpora are tiny next to the default 128 MB
+ * for its 8 MB `maxPartitionBytes`; this suite's sizing is
+ * `graft.ops.Sessions.scalingConfigs`): test corpora are tiny next to the default 128 MB
  * split size — a 60-220 MB corpus would coalesce to 1-3 scan partitions and
  * run the whole map side on 3 of N cores. A real cluster job over 100 TB
  * has millions of natural splits; small splits here recreate that shape.
@@ -261,71 +261,15 @@ object ScalingSuite {
       } else {
         val winStart = pinSelf(cores, sampleIdx(cores))
         sampleIdx(cores) += 1
-        val bcastMb = sys.env.getOrElse("GRAFT_BCAST_MB", "32").toLong
-        val spark = graft.ops.Sessions.builder(cores, s"graft-scaling-$cores")
-          .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-          .config("spark.sql.adaptive.enabled", "true")
-          // 32 MB, NOT the round-2 128 MB: at ≥300k docs the feature table's
-          // ESTIMATED size still fit 128 MB, so the attach joins planned as
-          // broadcasts whose real deserialized build is ~1 GB — a
-          // single-threaded driver-side stall that ate minutes of the
-          // scaling points. A shuffle join is the correct plan at that size.
-          .config("spark.sql.autoBroadcastJoinThreshold", (bcastMb * 1024 * 1024).toString)
-          // split size trades scan balance against TASK-DISPATCH FLOOR: the
-          // cached feature table inherits the scan's partition count, and
-          // stage telemetry at 900k docs showed ~9 downstream branch/AQE
-          // stages re-scanning that cache NEAR-EMPTY (288 tasks each at 8 MB
-          // splits ≈ 2.6k dispatched no-op tasks ≈ 5 s of driver-serial
-          // floor, paid identically at every core count — exactly what the
-          // N-vs-4N ratio is capped by). 32 MB → ~72 splits on the 2.3 GB
-          // rule corpus: still 9 waves at 8 cores (the graded pair), one
-          // fewer order of dispatch floor. A real 100 TB input has millions
-          // of natural splits — split COUNT there is data-sized, and the
-          // per-consumer dispatch cost amortizes over real bytes per task.
-          .config("spark.sql.files.maxPartitionBytes",
-            (sys.env.getOrElse("GRAFT_MAX_PART_MB", "32").toLong * 1024 * 1024).toString)
-          .config("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-          // hash joins over sort-merge where a side fits per-partition
-          // memory: the attach/score joins shuffle ~1M+ rows whose sort adds
-          // CPU at every point; SHJ skips both sorts (same answer, same
-          // shuffle keys)
-          .config("spark.sql.join.preferSortMergeJoin", "false")
-          // finer post-shuffle targets keep CPU-heavy reduce stages at full
-          // parallelism even when AQE coalesces by size
-          // 16 MB kept after an A/B at 8 (theory said finer bins fix the
-          // 12-task scoring stage's 8+4 wave at 8 cores; measurement said
-          // the 2-core side sped up MORE — interleaved clean pairs read
-          // eff 0.75 @16 MB vs 0.68 @8 MB at 150k docs, both within host
-          // weather but consistently ordered). Env knob for re-measurement.
-          .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            (sys.env.getOrElse("GRAFT_ADVISORY_MB", "16").toLong * 1024 * 1024).toString)
-          .config("spark.local.dir", "/tmp/graft-spark-local")
-          .getOrCreate()
+        val spark = graft.ops.Sessions
+          .scaling(cores, shufflePartitions, s"graft-scaling-$cores").getOrCreate()
         spark.sparkContext.setLogLevel("ERROR")
 
-        // optional stage telemetry: task counts expose parallelism ceilings
-        val stats = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int, Long, Long, Long, Long)]()
-        val debug = sys.env.contains("GRAFT_STAGE_STATS")
-        if (debug) spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val si = sc.stageInfo
-              val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(0L)
-              stats.add((si.stageId, si.name.takeWhile(_ != '\n').take(60), si.numTasks,
-                si.taskMetrics.executorRunTime, wall,
-                si.submissionTime.getOrElse(0L), si.completionTime.getOrElse(0L)))
-            }
-          })
-
+        def runCorpus(): Unit = ErPipeline.run(spark.read.parquet(corpusDir)
+          .as[graft.schema.Page](org.apache.spark.sql.Encoders.product[graft.schema.Page])).count()
         // JIT/codegen warm-up at this core count (excluded from timing)
         ErPipeline.run(CorpusGen.pages(spark, 2000L, seed = 7L, partitions = cores)).count()
-        if (!warmedBig) {
-          ErPipeline.run(spark.read.parquet(corpusDir)
-            .as[graft.schema.Page](org.apache.spark.sql.Encoders.product[graft.schema.Page])).count()
-          warmedBig = true
-        }
-        stats.clear()
+        if (!warmedBig) { runCorpus(); warmedBig = true }
 
         // host-weather canary BEFORE the timed window (paired with one
         // after and with the in-run WeatherProbe below; the reported canary
@@ -350,24 +294,10 @@ object ScalingSuite {
 
         def timed(): Double = {
           val t0 = System.nanoTime()
-          ErPipeline.run(spark.read.parquet(corpusDir)
-            .as[graft.schema.Page](org.apache.spark.sql.Encoders.product[graft.schema.Page])).count()
+          runCorpus()
           (System.nanoTime() - t0) / 1e9
         }
-        val runT0 = System.currentTimeMillis()
-        val first = timed()
-        if (debug) {
-          import scala.jdk.CollectionConverters._
-          // full timeline in submission order: [start, end] relative to the
-          // timed run's t0 exposes stage overlap vs dead wall (a stage with
-          // big wall and ~0 cpu that OVERLAPS a busy stage is harmless; one
-          // that doesn't is serial floor)
-          val all = stats.asScala.toSeq.sortBy(_._6)
-          all.foreach { case (id, name, tasks, run, wall, sub, comp) =>
-            println(f"STAGE[$cores] id=$id tasks=$tasks [${(sub - runT0) / 1e3}%.1f-${(comp - runT0) / 1e3}%.1f] wall=${wall / 1e3}%.1fs cpu=${run / 1e3}%.1fs $name")
-          }
-        }
-        val best = (Seq(first) ++ (2 to runs).map(_ => timed())).min
+        val best = (timed() +: (2 to runs).map(_ => timed())).min
         // canary = worst of the two point-in-time brackets (tight gate);
         // canary_during = worst in-run probe sample (separate, LOOSER gate
         // in Bench: a max over ~30 draws is statistically above a single

@@ -24,33 +24,70 @@ class SessionsSpec extends AnyFunSuite {
       "spark.file.transferTo" -> "false"))
   }
 
-  test("builder applies the survival configs (options visible pre-build)") {
-    // a second SparkContext can't be created in the suite JVM, so assert at
-    // the builder level: survival() must leave every key in the builder's
-    // option map (reflection on the private options field — stable across
-    // Spark 3.x/4.x; if it moves, this test fails loudly, not silently)
-    val b = Sessions.builder(2, "sessions-spec")
+  /** A builder's option map. A second SparkContext can't be created in the
+    * suite JVM, so sessions are checked at the builder level (reflection on
+    * the private options field — stable across Spark 3.x/4.x; if it moves,
+    * these tests fail loudly, not silently). */
+  private def options(b: org.apache.spark.sql.SparkSession.Builder): Map[String, String] = {
     val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
       .takeWhile(_ != null)
       .flatMap(_.getDeclaredFields.find(_.getName == "options"))
       .toSeq.headOption
       .getOrElse(fail("SparkSessionBuilder no longer has an options field"))
     f.setAccessible(true)
-    val opts = f.get(b).asInstanceOf[scala.collection.mutable.Map[String, String]]
+    f.get(b).asInstanceOf[scala.collection.mutable.Map[String, String]].toMap
+  }
+
+  test("builder applies the survival configs (options visible pre-build)") {
+    val opts = options(Sessions.builder(2, "sessions-spec"))
     Sessions.survivalConfigs.foreach { case (k, v) =>
       assert(opts.get(k).contains(v), s"builder lost survival config $k (has: $opts)")
     }
   }
 
-  test("builder defaults to local[cores] but never overrides a submitted master") {
-    def masterOpt(b: org.apache.spark.sql.SparkSession.Builder): Option[String] = {
-      val f = Iterator.iterate[Class[_]](b.getClass)(_.getSuperclass)
-        .takeWhile(_ != null)
-        .flatMap(_.getDeclaredFields.find(_.getName == "options"))
-        .toSeq.headOption.getOrElse(fail("no options field"))
-      f.setAccessible(true)
-      f.get(b).asInstanceOf[scala.collection.mutable.Map[String, String]].get("spark.master")
+  test("bench recipe equals graft.Bench.session's settings") {
+    // graft.Bench.session is the frozen source of these literals: BenchExtra
+    // and Inspect must time the bench's job, so a drift fails here
+    for (c <- Seq(2, 8, 32)) {
+      val mb = 1024L * 1024
+      val expected = Map(
+        "spark.sql.shuffle.partitions" -> (c * 2).toString,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (32 * mb).toString,
+        "spark.sql.files.maxPartitionBytes" -> (8 * mb).toString,
+        "spark.sql.files.openCostInBytes" -> (512L * 1024).toString,
+        "spark.sql.join.preferSortMergeJoin" -> "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * mb).toString,
+        "spark.local.dir" -> "/dev/shm/graft-spark")
+      assert(Sessions.benchConfigs(c) == expected)
+      assert(options(Sessions.bench(c, "b-spec")) ==
+        options(Sessions.builder(c, "b-spec")) ++ expected)
     }
+  }
+
+  test("scaling recipe equals the ScalingSuite session it replaced") {
+    // the settings every recorded north-rule run used (the suite's former
+    // GRAFT_BCAST_MB / GRAFT_MAX_PART_MB / GRAFT_ADVISORY_MB defaults)
+    for (p <- Seq(16, 64)) {
+      val mb = 1024L * 1024
+      val expected = Map(
+        "spark.sql.shuffle.partitions" -> p.toString,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (32 * mb).toString,
+        "spark.sql.files.maxPartitionBytes" -> (32 * mb).toString,
+        "spark.sql.files.openCostInBytes" -> (512L * 1024).toString,
+        "spark.sql.join.preferSortMergeJoin" -> "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * mb).toString,
+        "spark.local.dir" -> "/tmp/graft-spark-local")
+      assert(Sessions.scalingConfigs(p) == expected)
+      assert(options(Sessions.scaling(8, p, "s-spec")) ==
+        options(Sessions.builder(8, "s-spec")) ++ expected)
+    }
+  }
+
+  test("builder defaults to local[cores] but never overrides a submitted master") {
+    def masterOpt(b: org.apache.spark.sql.SparkSession.Builder): Option[String] =
+      options(b).get("spark.master")
     val saved = sys.props.remove("spark.master")
     try {
       // plain runMain / tests: no external master -> local[cores] default

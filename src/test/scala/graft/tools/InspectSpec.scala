@@ -1,0 +1,29 @@
+package graft.tools
+
+import graft.{SparkEntry, SparkSpec}
+
+class InspectSpec extends SparkSpec {
+
+  private val dir = "/root/testdata/sf0.001"
+
+  test("profile counts the resolved target and records the warm run's jobs and stages") {
+    for ((name, runs, direct) <- Seq(
+        ("q1_agg", 2, SparkEntry.queries("q1_agg")),
+        ("dedup_simhash_full", 1, SparkEntry.stress("dedup_simhash_full")))) {
+      val p = Inspect.profile(spark, dir, name, runs)
+      assert(p.rows == direct(spark, dir).count(), name)
+      assert(p.seconds.size == runs)
+      assert(p.jobs.nonEmpty && p.stages.nonEmpty, s"$name recorded nothing: $p")
+      assert(p.jobs.forall(_.startMs >= p.startMs), s"$name kept an earlier run's job")
+      assert(p.jobs.forall(_.endMs >= 0), s"$name missed a job end")
+      val report = Inspect.report(name, p)
+      assert(report.contains("  JOB ") && report.contains("  STAGE "))
+    }
+  }
+
+  test("an unknown target fails listing the valid names") {
+    val e = intercept[IllegalArgumentException](Inspect.profile(spark, dir, "q0_nope", 1))
+    Seq("q0_nope", "q1_agg", "dedup_simhash_full", "dedup_minhash_full", Inspect.ErTarget)
+      .foreach(n => assert(e.getMessage.contains(n), e.getMessage))
+  }
+}
