@@ -94,13 +94,15 @@ object Blocking {
                scope: Option[graft.ops.CacheScope] = None): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val toks = split(normalize_text(col("text")), " ")
+    // one text-kernel pass per page yields both hash sets; the struct is
+    // referenced twice, so Catalyst keeps it in its own projection (a
+    // non-cheap producer is never inlined into two consumers)
     val raw0 = pages.toDF().select(
       col("url"),
       array_join(slice(split(normalize_text(substring_index(col("text"), "\n", 1)), " "),
         1, cfg.mentionMaxTokens), " ").as("mention"),
-      token_ngram_hashes(toks, 1, cfg.seed).as("tokenHashes"),
-      tf_filtered_hashes(toks, cfg.minTf, cfg.minTfKeep, cfg.seed).as("freqHashes"))
+      text_feature_hashes(col("text"), cfg.minTf, cfg.minTfKeep, cfg.seed).as("f"))
+      .select(col("url"), col("mention"), col("f.tokenHashes"), col("f.freqHashes"))
     // normalize+tokenize+hash every page is the single heaviest map kernel;
     // the DF-stop branch consumes it twice (df aggregation + output), so
     // keep one materialization instead of re-running the kernel per consumer.
@@ -110,11 +112,12 @@ object Blocking {
     // LAZY persist (not the scope's eager default): the FIRST consumer is
     // dfStopSet's dfs aggregate, whose own eager materialization (inside
     // the same sequential features() call, before any fan-out exists)
-    // builds this cache exactly once as a side effect — kernel pass and
-    // df aggregation fuse into ONE job. The eager barrier here cost one
-    // extra stage wave plus a full cache re-read between build and first
-    // use: ~1.7 s of serial (core-count-independent) wall on the 900k-doc
-    // scaling workload, i.e. pure fixed-floor F in the north-rule ratio.
+    // builds this cache as a side effect, so the kernel runs once per page.
+    // The build does NOT fuse with the df aggregation: AQE plans a cached
+    // relation as its own query stage, so one job (`count at
+    // Caches.scala`, the dfs cache's materializing count; no shuffle
+    // write) builds this cache, and a second job runs the aggregate's
+    // exchange over the cached blocks (`Inspect profile <corpus> er`).
     val raw = if (cfg.dfStopRatio < 1.0)
       scope.map(_.cacheLazy(raw0)).getOrElse(
         raw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))

@@ -159,7 +159,7 @@ object Dedup {
     // 10^12-doc scale
     val feats = scope.cache(df.select(
         col(idCol).cast("string").as("id"),
-        token_ngram_hashes(split(normalize_text(col(textCol)), " "), 1, cfg.seed).as("hashes"))
+        text_ngram_hashes(col(textCol), 1, cfg.seed).as("hashes"))
       .withColumn("setkey", contentKey128(col("hashes").cast("string"))))
 
     // tier 1: identical token sets — star pairs beyond maxBlock (O(n) per
@@ -287,8 +287,7 @@ object Dedup {
     val scope = new graft.ops.CacheScope
     val fp = scope.cache(df.select(
         col(idCol).cast("string").as("id"),
-        simhash64(token_ngram_hashes(split(normalize_text(col(textCol)), " "), 1, cfg.seed),
-          cfg.seed).as("fp")))
+        simhash64(text_ngram_hashes(col(textCol), 1, cfg.seed), cfg.seed).as("fp")))
 
     // tier 1: identical fingerprints (hamming 0); star pairs beyond maxBlock
     val (exactPairs0, fpStats) = blockPairsWithStats(
@@ -338,7 +337,7 @@ object Dedup {
                         seed: Long = 42L): DataFrame = {
     val t = df.select(
       col(idCol).as("id"),
-      token_ngram_hashes(split(normalize_text(col(textCol)), " "), n, seed).as("hashes"))
+      text_ngram_hashes(col(textCol), n, seed).as("hashes"))
     t.as("a").join(t.as("b"), pairCond(col("a.id"), col("b.id")))
       .select(
         col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -614,7 +613,7 @@ object Dedup {
   def decontaminate(corpus: DataFrame, benchmark: DataFrame,
                     idCol: String = "doc_id", textCol: String = "text",
                     n: Int = 13, seed: Long = 42L): DataFrame = {
-    def grams(c: Column) = token_ngram_hashes(split(normalize_text(c), " "), n, seed)
+    def grams(c: Column) = text_ngram_hashes(c, n, seed)
     val benchSet = benchmark
       .select(explode(grams(col(textCol))).as("g")).distinct()
       .agg(sort_array(collect_list(col("g"))).as("bench_grams")) // one row
@@ -709,8 +708,7 @@ object Dedup {
     require(minDocs >= 2, s"a span repeated in < 2 docs is not cross-doc, got $minDocs")
     val grams = docs.select(
       col(idCol).as("id"),
-      posexplode(token_ngram_hash_seq(
-        split(normalize_text(col(textCol)), " "), k, seed)).as(Seq("pos", "g")))
+      posexplode(text_ngram_hash_seq(col(textCol), k, seed)).as(Seq("pos", "g")))
     val repeated = grams.select(col("g"), col("id")).distinct()
       .groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocs)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -44,6 +45,20 @@ object GraftFunctions {
   def tf_filtered_hashes(tokens: Column, minTf: Int = 2, minKeep: Int = 8, seed: Long = 42L): Column =
     col(TfFilteredHashes(expr(tokens), minTf, minKeep, seed))
 
+  /** One-pass ≡ `token_ngram_hashes(split(normalize_text(text), " "), n, seed)`. */
+  def text_ngram_hashes(text: Column, n: Int, seed: Long = 42L): Column =
+    col(TextNgramHashes(expr(text), n, seed))
+
+  /** One-pass ≡ `token_ngram_hash_seq(split(normalize_text(text), " "), n, seed)`. */
+  def text_ngram_hash_seq(text: Column, n: Int, seed: Long = 42L): Column =
+    col(TextNgramHashSeq(expr(text), n, seed))
+
+  /** One-pass `STRUCT<tokenHashes, freqHashes>` ≡ `token_ngram_hashes(toks, 1,
+    * seed)` and `tf_filtered_hashes(toks, minTf, minKeep, seed)` over
+    * `toks = split(normalize_text(text), " ")`, tokens hashed once. */
+  def text_feature_hashes(text: Column, minTf: Int = 2, minKeep: Int = 8, seed: Long = 42L): Column =
+    col(TextFeatureHashes(expr(text), minTf, minKeep, seed))
+
   def minhash_signature(hashes: Column, numHashes: Int, seed: Long = 42L): Column =
     col(MinHashSignature(expr(hashes), numHashes, seed))
 
@@ -84,51 +99,43 @@ object GraftFunctions {
       F.xxhash64(F.lit(0x9e3779b97f4a7c15L), c).as("h2"))
   }
 
-  private def lit(e: Expression): Int =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => other.toString.toInt
-    }
-  private def litL(e: Expression): Long =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-      case i: Int  => i.toLong
-      case l: Long => l
-      case other   => other.toString.toLong
-    }
+  private def int(e: Expression): Int = e.eval(InternalRow.empty).toString.toInt
+  private def long(e: Expression): Long = e.eval(InternalRow.empty).toString.toLong
+  /** Optional trailing seed argument at position `i`. */
+  private def seed(es: Seq[Expression], i: Int): Long = if (es.length > i) long(es(i)) else 42L
+
+  /** Every SQL-facing function, once: name → builder over the call's
+    * argument expressions (size and seed arguments must be foldable).
+    * [[register]] and `graft.plans.GraftExtensions` both install this list. */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "extract_text" -> (es => ExtractText(es.head)),
+    "normalize_text" -> (es => NormalizeText(es.head)),
+    "jaro_winkler" -> (es => JaroWinkler(es(0), es(1))),
+    "levenshtein_sim" -> (es => LevenshteinSim(es(0), es(1))),
+    "char_shingle_hashes" -> (es => CharShingleHashes(es(0), int(es(1)), seed(es, 2))),
+    "token_ngram_hashes" -> (es => TokenNgramHashes(es(0), int(es(1)), seed(es, 2))),
+    "token_ngram_hash_seq" -> (es => TokenNgramHashSeq(es(0), int(es(1)), seed(es, 2))),
+    "tf_filtered_hashes" -> (es => TfFilteredHashes(es(0), int(es(1)), int(es(2)), seed(es, 3))),
+    "text_ngram_hashes" -> (es => TextNgramHashes(es(0), int(es(1)), seed(es, 2))),
+    "text_ngram_hash_seq" -> (es => TextNgramHashSeq(es(0), int(es(1)), seed(es, 2))),
+    "text_feature_hashes" -> (es => TextFeatureHashes(es(0), int(es(1)), int(es(2)), seed(es, 3))),
+    "minhash_signature" -> (es => MinHashSignature(es(0), int(es(1)), seed(es, 2))),
+    "minhash_band_keys" -> (es => MinHashBandKeys(es(0), int(es(1)), int(es(2)))),
+    "minhash_overlap" -> (es => MinHashOverlap(es(0), es(1))),
+    "jaccard_sorted" -> (es => JaccardSorted(es(0), es(1))),
+    "simhash64" -> (es => SimHash64(es(0), seed(es, 1))),
+    "simhash_band_keys" -> (es => SimHashBandKeys(es(0), int(es(1)), int(es(2)))),
+    "rolling_fingerprint" -> (es => RollingFingerprint(es.head)),
+    "hamming_dist64" -> (es => HammingDist64(es(0), es(1))),
+    "cosine_sim" -> (es => CosineSim(es(0), es(1))),
+    "dot_product" -> (es => DotProduct(es(0), es(1))),
+    "srp_band_keys" -> (es => SrpBandKeys(es(0), int(es(1)), int(es(2)), seed(es, 3))),
+    "tokenize_offsets" -> (es => TokenizeWithOffsets(es.head)),
+    "split_sentences" -> (es => SplitSentences(es.head)))
 
   /** Register the SQL-facing functions on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("extract_text", es => ExtractText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("normalize_text", es => NormalizeText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("jaro_winkler", es => JaroWinkler(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("levenshtein_sim", es => LevenshteinSim(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("char_shingle_hashes",
-      es => CharShingleHashes(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("token_ngram_hashes",
-      es => TokenNgramHashes(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("token_ngram_hash_seq",
-      es => TokenNgramHashSeq(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      es => MinHashSignature(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("minhash_band_keys",
-      es => MinHashBandKeys(es(0), lit(es(1)), lit(es(2))), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es(0), if (es.length > 1) litL(es(1)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("rolling_fingerprint", es => RollingFingerprint(es.head), "built-in")
-    reg.createOrReplaceTempFunction("hamming_dist64", es => HammingDist64(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_overlap", es => MinHashOverlap(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("jaccard_sorted", es => JaccardSorted(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_product", es => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("tf_filtered_hashes",
-      es => TfFilteredHashes(es(0), lit(es(1)), lit(es(2)), if (es.length > 3) litL(es(3)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("srp_band_keys",
-      es => SrpBandKeys(es(0), lit(es(1)), lit(es(2)), if (es.length > 3) litL(es(3)) else 42L), "built-in")
-    reg.createOrReplaceTempFunction("simhash_band_keys",
-      es => SimHashBandKeys(es(0), lit(es(1)), lit(es(2))), "built-in")
-    reg.createOrReplaceTempFunction("tokenize_offsets", es => TokenizeWithOffsets(es.head), "built-in")
-    reg.createOrReplaceTempFunction("split_sentences", es => SplitSentences(es.head), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
 }

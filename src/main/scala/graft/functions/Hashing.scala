@@ -69,9 +69,30 @@ object HashKernels {
     new GenericArrayData(sortedDistinct(out, out.length))
   }
 
-  /** Distinct, sorted hashes of word n-grams over a token array. */
-  def tokenNgrams(tokens: ArrayData, n: Int, seed: Long): ArrayData = {
+  /** Per-token xxhash64 of a token array (a null token hashes to 0): the
+    * raw input every token kernel below combines — the one-pass text
+    * kernel ([[TextKernels]]) computes the same values straight from the
+    * text's bytes. */
+  private def rawHashes(tokens: ArrayData, seed: Long): Array[Long] = {
     val cnt = tokens.numElements()
+    val raw = new Array[Long](cnt)
+    var i = 0
+    while (i < cnt) {
+      val t = tokens.getUTF8String(i)
+      raw(i) = if (t == null) 0L else hashU(t, seed)
+      i += 1
+    }
+    raw
+  }
+
+  /** Distinct, sorted hashes of word n-grams over a token array. */
+  def tokenNgrams(tokens: ArrayData, n: Int, seed: Long): ArrayData =
+    ngramsOf(rawHashes(tokens, seed), tokens.numElements(), n, seed)
+
+  /** [[tokenNgrams]] over the first `cnt` raw token hashes: gram i chains
+    * `h = mix64(h ^ raw(j))` from `h = seed` over tokens [i, i+n); a doc
+    * shorter than n tokens yields its whole-doc gram. */
+  private[functions] def ngramsOf(raw: Array[Long], cnt: Int, n: Int, seed: Long): ArrayData = {
     if (cnt == 0) return new GenericArrayData(Array.emptyLongArray)
     val m = math.max(1, cnt - n + 1)
     val out = new Array[Long](m)
@@ -80,11 +101,7 @@ object HashKernels {
       var h = seed
       var j = i
       val end = math.min(cnt, i + n)
-      while (j < end) {
-        val t = tokens.getUTF8String(j)
-        h = mix64(h ^ (if (t == null) 0L else hashU(t, seed)))
-        j += 1
-      }
+      while (j < end) { h = mix64(h ^ raw(j)); j += 1 }
       out(i) = h
       i += 1
     }
@@ -98,8 +115,11 @@ object HashKernels {
     * array: a strict n-token window cannot exist, and unlike the set
     * variant there is no whole-doc fallback (a positional consumer needs
     * every entry to be a real window at its index). */
-  def tokenNgramSeq(tokens: ArrayData, n: Int, seed: Long): ArrayData = {
-    val cnt = tokens.numElements()
+  def tokenNgramSeq(tokens: ArrayData, n: Int, seed: Long): ArrayData =
+    ngramSeqOf(rawHashes(tokens, seed), tokens.numElements(), n, seed)
+
+  /** [[tokenNgramSeq]] over the first `cnt` raw token hashes. */
+  private[functions] def ngramSeqOf(raw: Array[Long], cnt: Int, n: Int, seed: Long): ArrayData = {
     if (cnt < n) return new GenericArrayData(Array.emptyLongArray)
     val m = cnt - n + 1
     val out = new Array[Long](m)
@@ -107,11 +127,7 @@ object HashKernels {
     while (i < m) {
       var h = seed
       var j = i
-      while (j < i + n) {
-        val t = tokens.getUTF8String(j)
-        h = mix64(h ^ (if (t == null) 0L else hashU(t, seed)))
-        j += 1
-      }
+      while (j < i + n) { h = mix64(h ^ raw(j)); j += 1 }
       out(i) = h
       i += 1
     }
@@ -135,31 +151,31 @@ object HashKernels {
    * signal-destroying on realistic page lengths where glue vocabulary
    * repeats in-doc.
    */
-  def tfFilteredHashes(tokens: ArrayData, minTf: Int, minKeep: Int, seed: Long): ArrayData = {
-    val cnt = tokens.numElements()
-    if (cnt == 0) return new GenericArrayData(Array.emptyLongArray)
+  def tfFilteredHashes(tokens: ArrayData, minTf: Int, minKeep: Int, seed: Long): ArrayData =
+    distinctAndFrequent(rawHashes(tokens, seed), tokens.numElements(), minTf, minKeep, seed)._2
+
+  /** `(tokenNgrams(·, 1), tfFilteredHashes)` over the first `cnt` raw
+    * token hashes from ONE sort of the per-token hashes: a single pass
+    * over the sorted run lengths yields both the distinct set and the
+    * frequent subset. */
+  private[functions] def distinctAndFrequent(raw: Array[Long], cnt: Int, minTf: Int, minKeep: Int,
+                                             seed: Long): (ArrayData, ArrayData) = {
     val all = new Array[Long](cnt)
     var i = 0
-    while (i < cnt) {
-      val t = tokens.getUTF8String(i)
-      all(i) = mix64(seed ^ (if (t == null) 0L else hashU(t, seed)))
-      i += 1
-    }
-    java.util.Arrays.sort(all)
-    // single pass over the sorted hashes: count runs
+    while (i < cnt) { all(i) = mix64(seed ^ raw(i)); i += 1 }
+    Arrays.sort(all)
     val kept = new Array[Long](cnt)
-    val distinct = new Array[Long](cnt)
     var nk = 0; var nd = 0
     i = 0
     while (i < cnt) {
       var j = i
       while (j < cnt && all(j) == all(i)) j += 1
-      distinct(nd) = all(i); nd += 1
       if (j - i >= minTf) { kept(nk) = all(i); nk += 1 }
+      all(nd) = all(i); nd += 1 // compact the distinct values in place
       i = j
     }
-    if (nk >= minKeep) new GenericArrayData(Arrays.copyOf(kept, nk))
-    else new GenericArrayData(Arrays.copyOf(distinct, nd))
+    val distinct = new GenericArrayData(Arrays.copyOf(all, nd))
+    (distinct, if (nk >= minKeep) new GenericArrayData(Arrays.copyOf(kept, nk)) else distinct)
   }
 
   /**

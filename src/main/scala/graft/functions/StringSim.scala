@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.text.Normalizer
 import java.util.Locale
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -145,28 +144,14 @@ object StringSimKernels {
   /**
    * ER name/text normalization (frozen pure function; SURVEY.md §7.4.1):
    * Unicode NFD → strip combining marks → lowercase(Locale.ROOT) →
-   * non-alphanumeric runs become single spaces → trim.
+   * non-alphanumeric runs become single spaces → trim. Computed by the
+   * one-pass byte kernel ([[TextScan]]: ASCII folded inline, only non-ASCII
+   * runs go through NFD). A String round-trips through UTF-8 exactly for
+   * this rule: a lone surrogate encodes as '?', and both are separators.
    */
-  def normalize(s: String): String = {
-    val nfd = Normalizer.normalize(s, Normalizer.Form.NFD)
-    val sb = new java.lang.StringBuilder(nfd.length)
-    var pendingSpace = false
-    var i = 0
-    while (i < nfd.length) {
-      val c = nfd.charAt(i)
-      if (Character.getType(c) != Character.NON_SPACING_MARK) {
-        if (Character.isLetterOrDigit(c)) {
-          if (pendingSpace && sb.length > 0) sb.append(' ')
-          pendingSpace = false
-          sb.append(Character.toLowerCase(c))
-        } else pendingSpace = true
-      }
-      i += 1
-    }
-    sb.toString
-  }
+  def normalize(s: String): String = normalizeU(UTF8String.fromString(s)).toString
 
-  def normalizeU(s: UTF8String): UTF8String = UTF8String.fromString(normalize(s.toString))
+  def normalizeU(s: UTF8String): UTF8String = TextKernels.normalize(s)
 
   /** Locale-pinned lowercase used anywhere case-folding is needed. */
   def lowerRoot(s: String): String = s.toLowerCase(Locale.ROOT)

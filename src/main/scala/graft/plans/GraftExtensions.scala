@@ -2,10 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions._
+import graft.functions.GraftFunctions
 
 /**
  * SparkSessionExtensions entry point (SURVEY.md §2.11): makes every graft
@@ -20,45 +19,8 @@ import graft.functions._
  * optimizer and whole-stage codegen.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo("graft", name)
-
-  private def lit(e: Expression): Int =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toInt
-  private def litL(e: Expression): Long =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString.toLong
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def reg(name: String, builder: Seq[Expression] => Expression): Unit =
-      ext.injectFunction((FunctionIdentifier(name), info(name), builder))
-
-    reg("extract_text", es => ExtractText(es.head))
-    reg("normalize_text", es => NormalizeText(es.head))
-    reg("jaro_winkler", es => JaroWinkler(es(0), es(1)))
-    reg("levenshtein_sim", es => LevenshteinSim(es(0), es(1)))
-    reg("char_shingle_hashes", es =>
-      CharShingleHashes(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L))
-    reg("token_ngram_hashes", es =>
-      TokenNgramHashes(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L))
-    reg("token_ngram_hash_seq", es =>
-      TokenNgramHashSeq(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L))
-    reg("tf_filtered_hashes", es =>
-      TfFilteredHashes(es(0), lit(es(1)), lit(es(2)), if (es.length > 3) litL(es(3)) else 42L))
-    reg("minhash_signature", es =>
-      MinHashSignature(es(0), lit(es(1)), if (es.length > 2) litL(es(2)) else 42L))
-    reg("minhash_band_keys", es => MinHashBandKeys(es(0), lit(es(1)), lit(es(2))))
-    reg("minhash_overlap", es => MinHashOverlap(es(0), es(1)))
-    reg("jaccard_sorted", es => JaccardSorted(es(0), es(1)))
-    reg("simhash64", es => SimHash64(es(0), if (es.length > 1) litL(es(1)) else 42L))
-    reg("rolling_fingerprint", es => RollingFingerprint(es.head))
-    reg("hamming_dist64", es => HammingDist64(es(0), es(1)))
-    reg("cosine_sim", es => CosineSim(es(0), es(1)))
-    reg("dot_product", es => DotProduct(es(0), es(1)))
-    reg("srp_band_keys", es =>
-      SrpBandKeys(es(0), lit(es(1)), lit(es(2)), if (es.length > 3) litL(es(3)) else 42L))
-    reg("simhash_band_keys", es => SimHashBandKeys(es(0), lit(es(1)), lit(es(2))))
-    reg("tokenize_offsets", es => TokenizeWithOffsets(es.head))
-    reg("split_sentences", es => SplitSentences(es.head))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
+    }
 }

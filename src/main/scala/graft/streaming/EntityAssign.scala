@@ -90,8 +90,7 @@ object EntityAssign {
       pages.sparkSession.range(1).select(typedLit(Array.empty[Long]).as("stops"))
     else
       Blocking.dfStopSet(
-        pages.select(token_ngram_hashes(
-          split(normalize_text(col("text")), " "), 1, cfg.seed).as("tokenHashes")), cfg)
+        pages.select(text_ngram_hashes(col("text"), 1, cfg.seed).as("tokenHashes")), cfg)
   }
 
   /**
@@ -107,12 +106,12 @@ object EntityAssign {
    */
   def pageFeatures(pages: DataFrame, stops: DataFrame,
                    cfg: Blocking.Config = Blocking.Config()): DataFrame = {
-    val toks = split(normalize_text(col("text")), " ")
     pages.select(
         col("url"),
         array_join(slice(split(normalize_text(substring_index(col("text"), "\n", 1)), " "),
           1, cfg.mentionMaxTokens), " ").as("mention"),
-        tf_filtered_hashes(toks, cfg.minTf, cfg.minTfKeep, cfg.seed).as("freqHashes"))
+        text_feature_hashes(col("text"), cfg.minTf, cfg.minTfKeep, cfg.seed)
+          .getField("freqHashes").as("freqHashes"))
       .withColumn("__one", lit(1))
       .join(broadcast(stops.withColumn("__one", lit(1))), "__one")
       .withColumn("freqClean", array_except(col("freqHashes"), col("stops")))

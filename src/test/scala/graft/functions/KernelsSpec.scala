@@ -1,15 +1,17 @@
 package graft.functions
 
+import java.text.Normalizer
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 class KernelsSpec extends AnyFunSuite {
 
   /** Minimal property runner (scalatestplus bridge not in the offline cache). */
-  private def check(p: Prop): Unit = {
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)
+  private def check(p: Prop, runs: Int = 200): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(runs), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -50,6 +52,117 @@ class KernelsSpec extends AnyFunSuite {
     assert(StringSimKernels.normalize("José  O'Neill-Smith") == "jose o neill smith")
     assert(StringSimKernels.normalize("  ÁBC  123 ") == "abc 123")
     assert(StringSimKernels.normalize("") == "")
+  }
+
+  // --- one-pass text kernel ≡ split(normalize_text(text), " ") + array kernels
+
+  /** The whole-string normalization the byte kernel replaced: NFD of the
+    * full text, then the per-char rules. Kept as the oracle. */
+  private def wholeStringNormalize(s: String): String = {
+    val nfd = Normalizer.normalize(s, Normalizer.Form.NFD)
+    val sb = new java.lang.StringBuilder(nfd.length)
+    var pendingSpace = false
+    var i = 0
+    while (i < nfd.length) {
+      val c = nfd.charAt(i)
+      if (Character.getType(c) != Character.NON_SPACING_MARK) {
+        if (Character.isLetterOrDigit(c)) {
+          if (pendingSpace && sb.length > 0) sb.append(' ')
+          pendingSpace = false
+          sb.append(Character.toLowerCase(c))
+        } else pendingSpace = true
+      }
+      i += 1
+    }
+    sb.toString
+  }
+
+  /** `split(normalize_text(text), " ")` through the oracle normalization
+    * and Spark's own split (so `""` splits to one empty token). */
+  private def oracleTokens(text: UTF8String): ArrayData = new GenericArrayData(
+    UTF8String.fromString(wholeStringNormalize(text.toString))
+      .split(UTF8String.fromString(" "), -1).toArray[Any])
+
+  private def longs(a: ArrayData): Seq[Long] = a.toLongArray().toSeq
+
+  private val textChar: Gen[Char] = Gen.frequency(
+    6 -> Gen.choose(0x20, 0x7e).map(_.toChar),           // printable ASCII
+    2 -> Gen.oneOf(' ', ' ', '-', '\n', '\t', '\'', '.'), // separators
+    3 -> Gen.choose(0x00c0, 0x024f).map(_.toChar),       // precomposed Latin
+    2 -> Gen.choose(0x0300, 0x036f).map(_.toChar),       // combining marks
+    2 -> Gen.choose(0x0000, 0xffff).map(_.toChar))       // any BMP unit, lone surrogates too
+  private val mixedText: Gen[String] =
+    Gen.choose(0, 60).flatMap(n => Gen.listOfN(n, textChar)).map(_.mkString)
+  /** Raw bytes, valid UTF-8 or not: ASCII, UTF-8 of the chars above, and
+    * arbitrary bytes (stray continuations, truncated leads, overlongs). */
+  private val mixedBytes: Gen[Array[Byte]] = {
+    val piece: Gen[Seq[Byte]] = Gen.frequency(
+      3 -> Gen.choose(0x20, 0x7e).map(b => Seq(b.toByte)),
+      3 -> textChar.map(c => c.toString.getBytes("UTF-8").toSeq),
+      2 -> Gen.choose(0x80, 0xff).map(b => Seq(b.toByte)),
+      1 -> Gen.choose(Byte.MinValue, Byte.MaxValue).map(Seq(_)))
+    Gen.choose(0, 60).flatMap(n => Gen.listOfN(n, piece)).map(_.flatten.toArray)
+  }
+
+  private val seed = 42L
+
+  /** Every fused kernel equals its composition over `text`. */
+  private def fusedMatches(text: UTF8String): Boolean = {
+    val toks = oracleTokens(text)
+    val norm = StringSimKernels.normalizeU(text) ==
+      UTF8String.fromString(wholeStringNormalize(text.toString))
+    val grams = Seq(1, 2, 3, 13).forall { n =>
+      longs(TextKernels.ngramHashes(text, n, seed)) == longs(HashKernels.tokenNgrams(toks, n, seed)) &&
+      longs(TextKernels.ngramHashSeq(text, n, seed)) == longs(HashKernels.tokenNgramSeq(toks, n, seed))
+    }
+    norm && grams
+  }
+
+  test("normalize: byte kernel == whole-string NFD path (property, incl. lone surrogates)") {
+    check(Prop.forAll(mixedText) { (s: String) =>
+      StringSimKernels.normalize(s) == wholeStringNormalize(s)
+    }, runs = 2000)
+  }
+
+  test("text kernels == split(normalize_text) composition on mixed text (property)") {
+    check(Prop.forAll(mixedText) { (s: String) => fusedMatches(UTF8String.fromString(s)) },
+      runs = 2000)
+  }
+
+  test("text kernels == composition on raw bytes, incl. invalid UTF-8 (property)") {
+    check(Prop.forAll(mixedBytes) { (b: Array[Byte]) => fusedMatches(UTF8String.fromBytes(b)) },
+      runs = 2000)
+  }
+
+  test("text_feature_hashes == (token_ngram_hashes n=1, tf_filtered_hashes) at minKeep edges") {
+    check(Prop.forAll(mixedText, Gen.choose(1, 3)) { (s: String, minTf: Int) =>
+      // repeat words so the TF filter has survivors to count
+      val text = UTF8String.fromString(s + " " + s.take(s.length / 2))
+      val toks = oracleTokens(text)
+      val distinct = longs(HashKernels.tokenNgrams(toks, 1, seed))
+      val nFrequent = longs(HashKernels.tfFilteredHashes(toks, minTf, 0, seed)).length
+      Seq(0, 1, nFrequent - 1, nFrequent, nFrequent + 1, Int.MaxValue).forall { minKeep =>
+        val row = TextKernels.featureHashes(text, minTf, minKeep, seed)
+        longs(row.getArray(0)) == distinct &&
+          longs(row.getArray(1)) == longs(HashKernels.tfFilteredHashes(toks, minTf, minKeep, seed))
+      }
+    }, runs = 1000)
+  }
+
+  test("empty and separator-only text hash exactly one empty token") {
+    val empty = HashKernels.tokenNgrams(
+      new GenericArrayData(Array[Any](UTF8String.EMPTY_UTF8)), 1, seed).toLongArray()
+    for (s <- Seq("", " ", "  -- \n\t ", "\u0301\u0300", "\u2014 \u00a7")) {
+      val u = UTF8String.fromString(s)
+      assert(StringSimKernels.normalizeU(u) == UTF8String.EMPTY_UTF8, s)
+      for (n <- Seq(1, 2, 3, 13)) {
+        assert(longs(TextKernels.ngramHashes(u, n, seed)).length == 1, s"n=$n '$s'")
+        assert(TextKernels.ngramHashSeq(u, n, seed).numElements() == (if (n == 1) 1 else 0))
+      }
+      assert(longs(TextKernels.ngramHashes(u, 1, seed)) == empty.toSeq)
+      val row = TextKernels.featureHashes(u, 2, 8, seed)
+      assert(longs(row.getArray(0)) == empty.toSeq && longs(row.getArray(1)) == empty.toSeq)
+    }
   }
 
   // --- MinHash: signature overlap estimates Jaccard (property) ---------

@@ -38,4 +38,23 @@ class ExtensionsSpec extends SparkSpec {
     assert(math.abs(r.getAs[Double]("cos") - 1.0) < 1e-12)
     assert(r.getAs[String]("txt") == "hi & bye")
   }
+
+  test("SQL text_* kernels equal their split(normalize_text(...)) compositions") {
+    GraftFunctions.register(spark)
+    val r = spark.sql(
+      """SELECT
+        |  text_ngram_hashes(s, 2) = token_ngram_hashes(split(normalize_text(s), ' '), 2) AS ngrams,
+        |  text_ngram_hash_seq(s, 2, 7) =
+        |    token_ngram_hash_seq(split(normalize_text(s), ' '), 2, 7) AS seq,
+        |  text_feature_hashes(s, 1, 2).tokenHashes =
+        |    token_ngram_hashes(split(normalize_text(s), ' '), 1) AS tokens,
+        |  text_feature_hashes(s, 1, 2).freqHashes =
+        |    tf_filtered_hashes(split(normalize_text(s), ' '), 1, 2) AS freq,
+        |  size(text_ngram_hashes(s, 2)) AS n
+        |FROM VALUES ('José  O''Neill-Smith') AS t(s)
+        |""".stripMargin).collect()(0)
+    assert(r.getAs[Boolean]("ngrams") && r.getAs[Boolean]("seq"))
+    assert(r.getAs[Boolean]("tokens") && r.getAs[Boolean]("freq"))
+    assert(r.getAs[Int]("n") == 3) // jose o | o neill | neill smith
+  }
 }

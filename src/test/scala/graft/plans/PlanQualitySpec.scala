@@ -28,6 +28,48 @@ class PlanQualitySpec extends SparkSpec {
     assert(scanSchema.contains("text"), s"text must be read: $scanSchema")
   }
 
+  /** Text-kernel expressions a plan evaluates — each cache's plan counted
+    * once however often the cache is read — and `normalize_text` calls
+    * whose input is the `text` column itself. */
+  private def textPasses(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): (Int, Int) = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import graft.functions.{NormalizeText, TextFeatureHashes, TextNgramHashSeq, TextNgramHashes}
+    def count(es: Seq[Expression]): (Int, Int) = {
+      val all = es.flatMap(_.collect { case e => e })
+      (all.count {
+        case _: TextFeatureHashes | _: TextNgramHashes | _: TextNgramHashSeq => true
+        case _ => false
+      }, all.count {
+        case NormalizeText(a: Attribute) => a.name == "text"
+        case _ => false
+      })
+    }
+    val caches = plan.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
+    }.distinct
+    (count(plan.flatMap(_.expressions)) +: caches.map(c => count(c.flatMap(_.expressions))))
+      .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+  }
+
+  test("page features run ONE text-kernel pass over text, no split(normalize_text(text))") {
+    // CollapseProject must not inline the (tokenHashes, freqHashes) struct
+    // into both of its field reads — that would silently run the kernel
+    // twice per page — and no caller may go back to the string composition
+    import spark.implicits._
+    val pages = CorpusGen.pages(spark, 100L, seed = 42L, partitions = 2)
+    val noStop = Blocking.features(pages, Blocking.Config(dfStopRatio = 1.0))
+    assert(textPasses(noStop.queryExecution.optimizedPlan) == (1, 0),
+      noStop.queryExecution.optimizedPlan.toString)
+    val withStop = Blocking.features(pages, Blocking.Config())
+    assert(textPasses(withStop.queryExecution.optimizedPlan) == (1, 0),
+      withStop.queryExecution.optimizedPlan.toString)
+    val stops = spark.range(1).select(typedLit(Array(1L, 2L)).as("stops"))
+    val online = graft.streaming.EntityAssign.pageFeatures(pages.toDF(), stops)
+    assert(textPasses(online.queryExecution.optimizedPlan) == (1, 0),
+      online.queryExecution.optimizedPlan.toString)
+    withStop.unpersist()
+  }
+
   test("DF-stop set rides a broadcast, never a driver collect/plan literal") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-pages-stop").toString
