@@ -3,33 +3,20 @@ package graft.ops
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /**
  * Per-stage / per-partition lineage counters (SURVEY.md §2.5 A5; north rule
  * "per-partition lineage and counters written alongside snapshot
  * checkpoints"). The reference logs skip/discard counters ad hoc
  * (`/root/reference/relik/reader/data/relik_reader_data.py:815-841`); here
- * they are first-class: `df.observe(...)` metrics collected at action time
- * plus an explicit partition histogram, dumped as JSON next to the stage
- * manifest.
+ * they are first-class: a `(partition, rows)` list — for a checkpointed
+ * stage, one entry per written part file, counted from its parquet footer
+ * by [[Checkpoints.stage]], so no pass over the data — dumped as JSON next
+ * to the stage manifest with its total and skew factor.
  */
 object Lineage {
 
-  /** Row-count + per-partition histogram of a stage output. */
-  def partitionCounts(df: DataFrame): Seq[(Int, Long)] = {
-    df.select(spark_partition_id().as("pid"))
-      .groupBy("pid").count()
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .sortBy(_._1)
-      .toSeq
-  }
-
-  def writeCounters(dir: String, stage: String, df: DataFrame,
+  def writeCounters(dir: String, stage: String, parts: Seq[(Int, Long)],
                     extra: Map[String, Long] = Map.empty): Unit = {
-    val parts = partitionCounts(df)
     val partsJson = parts.map { case (p, c) => s"""{"partition":$p,"rows":$c}""" }
       .mkString("[", ",", "]")
     val extraJson = extra.map { case (k, v) => s""""$k":$v""" }.mkString(",")

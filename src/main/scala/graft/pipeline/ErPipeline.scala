@@ -7,7 +7,7 @@ import graft.block.Blocking
 import graft.cluster.ConnectedComponents
 import graft.eval.PairwiseF1
 import graft.functions.GraftFunctions.id128
-import graft.ops.{Checkpoints, Lineage}
+import graft.ops.Checkpoints
 import graft.schema.Page
 import graft.score.PairScorer
 
@@ -99,45 +99,41 @@ object ErPipeline {
   }
 
   /** Checkpointed variant: every stage is a committed snapshot (resume-safe;
-    * see [[Config]] for the fingerprint). Feature/pair/edge snapshots live
-    * in id space — the features snapshot keeps BOTH the url and the derived
-    * id column, so downstream consumers (e.g. Main's candidate-miss
-    * diagnostics) can translate pair snapshots back to urls with one
-    * broadcast-or-shuffle join against it ([[pairsToUrls]]). */
+    * see [[Config]] for the fingerprint) that names the stages it was built
+    * from, so a recomputed stage recomputes every stage after it.
+    * Feature/pair/edge snapshots live in id space — the features snapshot
+    * keeps BOTH the url and the derived id column, so downstream consumers
+    * (e.g. Main's candidate-miss diagnostics) can translate pair snapshots
+    * back to urls with one broadcast-or-shuffle join against it
+    * ([[pairsToUrls]]). */
   def runCheckpointed(spark: SparkSession, pages: Dataset[Page], workDir: String,
                       cfg: Config = Config()): DataFrame = {
-    val fp = cfg.fingerprint
+    def stage(name: String, inputs: String*)(df: => DataFrame): DataFrame =
+      Checkpoints.stage(spark, s"$workDir/$name", name, cfg.fingerprint,
+        inputs.map(i => s"$workDir/$i"))(df)
 
-    val pagesT = Checkpoints.stage(spark, s"$workDir/pages", "pages", fp) {
-      pages.toDF()
-    }
-    Lineage.writeCounters(s"$workDir/pages", "pages", pagesT)
+    val pagesT = stage("pages")(pages.toDF())
 
-    val feats = Checkpoints.stage(spark, s"$workDir/features", "features", fp) {
+    val feats = stage("features", "pages") {
       Blocking.features(
           pagesT.as[Page](org.apache.spark.sql.Encoders.product[Page]), cfg.blocking)
         .withColumn("nid", id128(col("url")))
     }
-    Lineage.writeCounters(s"$workDir/features", "features", feats)
 
     // id-space view of the features snapshot (url dropped, nid as the key)
     val featsKeyed = feats.drop("url").withColumnRenamed("nid", "url")
 
-    val pairs = Checkpoints.stage(spark, s"$workDir/pairs", "pairs", fp) {
+    val pairs = stage("pairs", "features") {
       Blocking.candidatePairs(Blocking.blockKeys(featsKeyed, cfg.blocking), cfg.blocking)
     }
-    Lineage.writeCounters(s"$workDir/pairs", "pairs", pairs)
 
-    val edges = Checkpoints.stage(spark, s"$workDir/edges", "edges", fp) {
+    val edges = stage("edges", "pairs", "features") {
       PairScorer.score(Blocking.attachFeatures(pairs, featsKeyed), cfg.scorer)
     }
-    Lineage.writeCounters(s"$workDir/edges", "edges", edges)
 
-    val clusters = Checkpoints.stage(spark, s"$workDir/clusters", "clusters", fp) {
+    stage("clusters", "pages", "edges") {
       clusterByMinUrl(pagesT, edges)
     }
-    Lineage.writeCounters(s"$workDir/clusters", "clusters", clusters)
-    clusters
   }
 
   /**

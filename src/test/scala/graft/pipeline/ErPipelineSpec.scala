@@ -117,13 +117,118 @@ class ErPipelineSpec extends SparkSpec {
 
     val featsDir = s"$dir/features"
     ErPipeline.runCheckpointed(spark, p, dir, cfg1).count()
-    assert(graft.ops.Checkpoints.manifestExists(featsDir, cfg1.fingerprint))
+    def committedFp = graft.ops.Checkpoints.readManifest(featsDir).map(_.fingerprint)
+    assert(committedFp.contains(cfg1.fingerprint))
     ErPipeline.runCheckpointed(spark, p, dir, cfg2).count()
-    assert(graft.ops.Checkpoints.manifestExists(featsDir, cfg2.fingerprint),
+    assert(committedFp.contains(cfg2.fingerprint),
       "features stage resumed under a stale config")
     val snap = sigs(spark.read.parquet(s"$featsDir/data"))
     assert(snap.exceptAll(fresh2).count() == 0 && fresh2.exceptAll(snap).count() == 0,
       "features snapshot is not the new config's features")
+    p.unpersist()
+  }
+
+  /** Call sites of the jobs `body` launches: the action of a job's SQL
+    * execution (AQE submits a query's stages as jobs of their own), else its
+    * own stage's call site; with whether that execution is a file write. */
+  private def jobSites(body: => Unit): Seq[(String, Boolean)] = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, (String, Boolean)]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
+    val marker = s"drain-${System.nanoTime()}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => executions.put(x.executionId.toString,
+          (x.description, x.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand")))
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        if (p.exists(_.getProperty("erpipelinespec.marker") == marker)) drained.countDown()
+        else jobs.add(p.flatMap(q => Option(q.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(executions.get(id)))
+          .getOrElse((e.stageInfos.lastOption.map(_.name).getOrElse(""), false)))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the marker job's start event queues behind every event of `body`
+      sc.setLocalProperty("erpipelinespec.marker", marker)
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty("erpipelinespec.marker", null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener did not drain")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  private val ckptStages = Seq("pages", "features", "pairs", "edges", "clusters")
+
+  test("checkpointed stages commit from their own writes: no count, schema or lineage job") {
+    import java.nio.file.{Files, Paths}
+    import graft.ops.Checkpoints
+    val dir = Files.createTempDirectory("graft-er-jobs").toString
+    val p = CorpusGen.pages(spark, 400L, seed = 13L).cache()
+    p.count()
+    var out: org.apache.spark.sql.DataFrame = null
+    val fresh = jobSites { out = ErPipeline.runCheckpointed(spark, p, dir) }
+    assert(!fresh.exists(_._1.contains("Lineage.scala")), s"lineage jobs: $fresh")
+    val ckpt = fresh.filter(_._1.contains("Checkpoints.scala"))
+    assert(ckpt.nonEmpty && ckpt.forall(_._2),
+      s"jobs at Checkpoints.scala other than the stage writes: ${ckpt.filterNot(_._2)}")
+    assert(ckpt.map(_._1).distinct.size == 1, s"one write call site: ${ckpt.distinct}")
+    val resumed = jobSites { ErPipeline.runCheckpointed(spark, p, dir) }
+    assert(!resumed.exists(j => j._1.contains("Checkpoints.scala") || j._1.contains("Lineage.scala")),
+      s"a fully resumed run launched jobs: $resumed")
+
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    for (s <- ckptStages) {
+      val data = s"$dir/$s/data"
+      val m = Checkpoints.readManifest(s"$dir/$s").getOrElse(fail(s"$s not committed"))
+      val counters = json.readTree(Paths.get(dir, s, "counters.json").toFile)
+      val partRows = counters.get("partitions").elements()
+      var partSum = 0L
+      while (partRows.hasNext) partSum += partRows.next().get("rows").longValue
+      val inferred = spark.read.parquet(data)
+      val n = inferred.count()
+      assert(counters.get("rows").longValue == n && m.rows == n && partSum == n,
+        s"$s: counters ${counters.get("rows")}, manifest ${m.rows}, table $n rows")
+      assert(spark.read.schema(m.schema).parquet(data).schema == inferred.schema,
+        s"$s: the resume schema is not the table's")
+    }
+    assert(out.schema == spark.read.parquet(s"$dir/clusters/data").schema)
+    p.unpersist()
+  }
+
+  test("crash before the edges commit: the re-run recomputes only edges and clusters") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-er-crash").toString
+    val p = CorpusGen.pages(spark, 400L, seed = 17L).cache()
+    def partFiles(s: String) =
+      new java.io.File(s"$dir/$s/data").list().filter(_.startsWith("part-")).sorted.toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String)].collect().sorted.toSeq
+    val want = rows(ErPipeline.runCheckpointed(spark, p, dir))
+    val before = ckptStages.map(s => s -> partFiles(s)).toMap
+    // the edges stage wrote its data but never committed: stale data and
+    // counters, no manifest
+    Files.delete(Paths.get(dir, "edges", "manifest.json"))
+    Files.write(Paths.get(dir, "edges", "counters.json"), "{\"stage\":\"stale\"}".getBytes)
+
+    assert(rows(ErPipeline.runCheckpointed(spark, p, dir)) == want)
+    for (s <- Seq("pages", "features", "pairs"))
+      assert(partFiles(s) == before(s), s"$s was recomputed")
+    for (s <- Seq("edges", "clusters"))
+      assert(partFiles(s).intersect(before(s)).isEmpty, s"$s was not recomputed")
+    val counters = new String(Files.readAllBytes(Paths.get(dir, "edges", "counters.json")))
+    val m = graft.ops.Checkpoints.readManifest(s"$dir/edges").getOrElse(fail("edges not committed"))
+    assert(counters.contains("\"stage\":\"edges\"") && counters.contains(s"\"rows\":${m.rows},"),
+      s"edges counters are not the new write's: $counters")
     p.unpersist()
   }
 
