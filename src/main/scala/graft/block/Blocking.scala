@@ -21,14 +21,16 @@ import graft.schema.Page
  * Pair generation is block-local and skew-aware (SURVEY.md §4.2):
  *   - blocks ≤ `maxBlock`: all C(n,2) pairs (bounded by cap²/2)
  *   - `maxBlock` < blocks ≤ `purgeLimit`: sorted-neighborhood within the
- *     block (`Window.partitionBy(key).orderBy(sortKey)` + `lead`), O(n·w)
- *     pairs instead of O(n²) — the hot-key path
+ *     block, each member paired with its next `snWindow` members in
+ *     (mention, id) order: O(n·w) pairs instead of O(n²) — the hot-key path
  *   - blocks > `purgeLimit`: purged (boilerplate/stop-token blocks carry no
  *     linkage signal at web scale; SparkER-style block purging), counted in
  *     lineage.
  *
- * All decisions are data-driven from a single block-size aggregation —
- * map-side combined, one shuffle — not a driver-side collect.
+ * All decisions are data-driven from one thin block-size aggregation —
+ * map-side combined, not a driver-side collect — which purges exactly
+ * before any pair work; both branches then come from ONE keyed window
+ * over the live block rows (`Dedup.blockPairs`).
  */
 object Blocking {
 
@@ -238,16 +240,17 @@ object Blocking {
     import spark.implicits._
 
     // Pair generation is UNIFIED with `Dedup.blockPairs` — identical
-    // small/hot/purge policy, one implementation. Block sizes come from a
-    // partial-aggregable `groupBy(key).agg(count, min)` joined back on the
-    // key, NOT a whole-group `count(*) over (partition by key)` window:
-    // WindowExec buffers every group in one task's memory pool, and fused
-    // into the same stage as the small-branch collect_list hash aggregate
-    // the two compete for that pool — the exact stage shape that died with
-    // UNABLE_TO_ACQUIRE_MEMORY in the 6M-doc dress rehearsal (BASELINE.md
-    // lesson 5). The sorted-neighborhood branch orders by (mention,
-    // id128(id)): similar anchor mentions sit adjacently (the recall
-    // signal), and the tiebreak is the id's 128-bit hash so url-keyed and
+    // small/hot/purge policy, one implementation: thin per-key stats
+    // (a partial-aggregable `groupBy(key).agg(count)`, never a whole-group
+    // count window) filtered to live blocks and joined back, an explicit-N
+    // keyed exchange AQE cannot coalesce, then ONE window: a growing
+    // collect_list frame gives a small block's rows their C(n,2) tails and
+    // `lead` gives a hot block's rows their sorted-neighborhood successors,
+    // O(snWindow) per row. The window's largest group is the largest live
+    // block (≤ purgeLimit), as for the old sorted-neighborhood branch
+    // (BASELINE.md lesson 5). The block order is (mention, id128(id)):
+    // similar anchor mentions sit adjacently (the recall signal), and the
+    // tiebreak is the id's 128-bit hash so url-keyed and
     // hash-keyed blocks visit hot-block neighbors in the IDENTICAL order —
     // ErPipeline.run keys on id128(url) already, while
     // ErPipeline.incremental folds a batch into url-keyed state; hashing
@@ -257,10 +260,9 @@ object Blocking {
     val tiebreak: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       if (blocks.schema("url").dataType == org.apache.spark.sql.types.StringType) id128
       else identity
-    // mention rides as the SN ROW sort key, never in the payload: the
-    // payload is copied O(n) per member through the C(n,2) stream and the
-    // SN lead arrays, and only the ids are ever emitted (see
-    // Dedup.blockPairsWithStats rowSortKey doc).
+    // mention rides as the ROW sort key, never in the payload: the window's
+    // tail frame copies the payload up to maxBlock times per member, and
+    // only the ids are ever emitted (see Dedup.blockPairs' rowSortKey doc).
     graft.dedup.Dedup.blockPairs(
         blocks.select($"key", $"url".as("id"), $"mention"),
         struct($"id"), cfg.maxBlock, cfg.purgeLimit, cfg.snWindow,

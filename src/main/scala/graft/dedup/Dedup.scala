@@ -385,41 +385,90 @@ object Dedup {
   // ----------------------------------------------------------------- util
   /**
    * Pairs within blocks keyed by `key` under the three-branch skew policy
-   * (see object doc). Block sizes (and the star branch's block-min center)
-   * come from a partial-aggregable `groupBy(key).agg(count, min)` joined
-   * back on the key — NOT an unordered window: WindowExec buffers every
-   * group in a spillable row array, and fused into the same stage as the
-   * small-branch `collect_list` hash aggregate the two compete for the same
-   * task memory pool (observed `UNABLE_TO_ACQUIRE_MEMORY` at 6M docs with
-   * 32 concurrent tasks — the 100×-scale dress rehearsal, BASELINE.md).
-   * The aggregate+join costs the same ONE shuffle of the block rows (the
-   * counts side is thin and map-side combined); no collect_list of
-   * unbounded blocks ever happens. Output: (a, b) payload structs with
-   * a.id < b.id (canonical order — the same unordered pair from two blocks
-   * dedups correctly downstream).
+   * (see object doc), generated by ONE keyed window:
+   *
+   *  1. thin per-key stats `groupBy(key).agg(n, pmin [, nTouch])`,
+   *     partial-aggregable and map-side combined — NOT an unordered
+   *     `count(*) over (partition by key)` window, which buffers whole
+   *     groups just to learn their size. The stats purge exactly: they
+   *     are filtered to the blocks the window pairs (2 ≤ n ≤ purgeLimit,
+   *     n ≤ cap in star mode, plus nTouch ≥ 1 in delta mode) and joined
+   *     back to the block rows, so singleton, purged and untouched blocks
+   *     never reach the window;
+   *  2. an EXPLICIT-N keyed exchange of those rows. AQE sizes an
+   *     ENSURE_REQUIREMENTS exchange by its input bytes and cannot see the
+   *     pair explode's amplification (the stream is quadratic in block
+   *     size), so it coalesced the whole pair stage onto 1-2 tasks at bench
+   *     sf0.1 (guide §2.5); a repartition with an explicit count is exempt
+   *     from coalescing and also satisfies the window's distribution.
+   *     N = max(defaultParallelism, numShufflePartitions / 2): one task per
+   *     core is free at bench scale (a fan-out sweep over 8/32/64 read
+   *     11.38/11.34/11.89 s), and the conf term keeps a floor for pair
+   *     streams that need thousands of partitions;
+   *  3. `Window.partitionBy(key).orderBy(sortKey desc, id desc)`, two kinds
+   *     of function over it:
+   *      - `tail = collect_list(p if n ≤ cap)` over ROWS UNBOUNDED PRECEDING
+   *        .. 1 PRECEDING: in descending order that is every member AFTER
+   *        the row in (sortKey, id) order, so a small block's rows explode
+   *        its full C(n,2), each unordered pair once. The frame is a
+   *        GROWING one: Spark adds one row per step and never re-aggregates,
+   *        where a bounded sliding frame re-aggregates its whole frame for
+   *        every row — O(cap) per row even where the row needs only
+   *        snWindow neighbors. Hot rows feed it null (skipped), so a hot
+   *        block costs O(1) here and no array ever exceeds cap − 1;
+   *      - `lead(p, 1..snWindow)` for hot blocks (cap < n ≤ purgeLimit):
+   *        sorted-neighborhood chains, O(snWindow) per row; in delta mode
+   *        only marked rows emit, their `lead` and `lag` neighbors;
+   *  4. one explode, null neighbors and self-pairs dropped (and, in delta
+   *     mode, pairs with no marked side), canonical order.
+   *
+   * Star mode keeps oversized blocks (cap < n ≤ purgeLimit) OUT of the
+   * window: they pair each member with the block-min `pmin` straight from
+   * the stats join — no ordering, no per-key buffering — and union with
+   * the window's pairs. The exact tiers that use it pass purgeLimit =
+   * Int.MaxValue, and one exact-duplicate family may be millions of rows.
+   *
+   * Stock window frames and `explode` stay inside whole-stage codegen; no
+   * custom Generator (CodegenFallback) and no nested C(n,2) array is ever
+   * built — peak per row is one tail of < cap payloads. The window's largest
+   * group is the largest block it pairs (≤ purgeLimit rows, ≤ cap in star
+   * mode; spillable), the bound the sorted-neighborhood branch always had
+   * (BASELINE.md lesson 5).
+   * Output: (a, b) payload structs with a.id < b.id — a pair reached from
+   * two blocks dedups correctly downstream — and never a.id == b.id, even
+   * when a `(key, id)` row occurs twice: connected components takes ER's
+   * edges as canonical (`edgesCanonical = true`), which excludes self-loops.
    *
    * @param payload  struct whose FIRST field must be `id`
-   * @param sortKey  block-local neighborhood order for the SN branch (sort
-   *                 similar members adjacently: fingerprint for simhash,
-   *                 id otherwise)
+   * @param sortKey  block-local order (sort similar members adjacently:
+   *                 fingerprint for simhash, id otherwise); ties break on id
    * @param oversizedStar oversized blocks emit STAR pairs (block-min payload
    *                 × each member, O(n) rows) instead of sorted-neighborhood
    *                 chains — the right shape for EXACT-identity tiers, where
    *                 a 10M-member dup family must stay connected without
    *                 C(n,2) or chain-only pairing
    * @param touching DELTA mode: a predicate over the payload marking batch
-   *                 rows. When set, only pairs with ≥1 marked side are
-   *                 emitted, blocks with NO marked member are skipped before
-   *                 any pair work (the daily-increment regime: ~all corpus
-   *                 blocks), and the SN branch pairs each marked row with
-   *                 its ±snWindow sorted neighbors (lead + lag over one
-   *                 shared window spec = one exchange+sort) instead of
-   *                 emitting every block-local chain link. Without this
-   *                 policy an incremental fold cross-joined batch×block up
-   *                 to purgeLimit members — one 50k-member mention block ×
-   *                 5k batch members = 250M pairs each dragging two
-   *                 signature payloads, the shape that OOM-killed the 3.3M
-   *                 -doc fold rehearsal at 60 GB of shuffle.
+   *                 rows. Only pairs with ≥1 marked side are emitted — the
+   *                 offline pair set restricted to the batch, each pair
+   *                 once — and blocks with NO marked member are dropped at
+   *                 the stats before any pair work (the daily-increment
+   *                 regime: ~all corpus blocks). In a hot block only the
+   *                 marked rows emit: a `lead` link (i, i+d) always, a
+   *                 `lag` link (i−d, i) only when i−d is unmarked (else
+   *                 i−d's `lead` emitted it). Without this policy an
+   *                 incremental fold cross-joined batch×block up to
+   *                 purgeLimit members — one 50k-member mention block × 5k
+   *                 batch members = 250M pairs each dragging two signature
+   *                 payloads, the shape that OOM-killed the 3.3M-doc fold
+   *                 rehearsal at 60 GB of shuffle.
+   * @param rowSortKey block order as a column over the BLOCK ROW instead of
+   *                 over the payload; overrides `sortKey`. Heavy sort-only
+   *                 columns (the ER mention string) must not ride the
+   *                 payload, which a small block's tails copy up to cap
+   *                 times per member: a 40-60 B mention on a 16 B id
+   *                 multiplied the hottest stream's bytes ~4× for a column
+   *                 only the window ORDER reads (guide §2.3). It is dropped
+   *                 before any pair is emitted.
    */
   private[graft] def blockPairs(blocks: DataFrame, payload: Column, cap: Int,
       purgeLimit: Int = 1000000, snWindow: Int = 8,
@@ -431,25 +480,11 @@ object Dedup {
       oversizedStar, touching, rowSortKey)._1
 
   /** [[blockPairs]] also returning its per-key stats table
-    * `(key, n, pmin [, nTouch])` — one row per DISTINCT key (singletons
-    * included). Callers that need per-key representatives anyway (the
-    * two-tier near-dup operators: tier 2 keys on `min id per tier-1 key`)
-    * consume THIS frame instead of running a second groupBy over the same
-    * keys: both consumers then share one physical aggregate subtree and
-    * Spark's ReuseExchange executes it once — one full exchange of the
-    * block rows saved per operator (guide §2.4: two operations keyed the
-    * same way share one exchange). */
-  /** @param rowSortKey SN-branch neighborhood order as a column over the
-    *        BLOCK ROW instead of over the payload. Heavy sort-only columns
-    *        (the ER mention string) must not ride the payload: the payload
-    *        is copied O(n) times per member through the C(n,2) stream
-    *        (collect_list + posexplode + tail slice) and ±snWindow times
-    *        through the SN lead arrays, so a 40-60 B mention on a 16 B id
-    *        multiplied the hottest stream's bytes ~4× for a column only the
-    *        window ORDER ever reads (guide §2.3: shuffle keys and metadata,
-    *        not payloads — the same rule applies to generated streams).
-    *        When set, it overrides `sortKey` and is dropped before any pair
-    *        is emitted. */
+    * `(key, n, pmin [, nTouch])` — one row per DISTINCT non-null key
+    * (singletons and purged blocks included). Callers that need per-key
+    * representatives anyway (the two-tier near-dup operators: tier 2 keys
+    * on `min id per tier-1 key`) consume THIS frame instead of running a
+    * second groupBy over the same keys. */
   private[graft] def blockPairsWithStats(blocks: DataFrame, payload: Column, cap: Int,
       purgeLimit: Int = 1000000, snWindow: Int = 8,
       sortKey: Column => Column = p => p.getField("id"),
@@ -458,113 +493,54 @@ object Dedup {
       rowSortKey: Option[Column] = None): (DataFrame, DataFrame) = {
     val spark = blocks.sparkSession
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
 
-    // Null blocking keys are EXCLUDED by design (made explicit here rather
-    // than implied by the stats equi-join): "null key" means "no blocking
-    // signal", not "one shared block" — the pre-round-4 window shape
-    // silently grouped every null-key row into a single giant pseudo-block
-    // and paired them, which was never intended and cannot scale. Callers
-    // whose key is meaningfully nullable must map null to a sentinel first.
+    // Null blocking keys are EXCLUDED by design: "null key" means "no
+    // blocking signal", not "one shared block" — grouping every null-key row
+    // into a single giant pseudo-block was never intended and cannot scale.
+    // Callers whose key is meaningfully nullable must map null to a sentinel.
     val rows = blocks.filter($"key".isNotNull).select(
       Seq($"key", payload.as("p")) ++ rowSortKey.map(_.as("s")): _*)
-    // thin per-key stats, map-side combined; min(p) is the star center
-    // (struct ordering is field-lexicographic and `id` is the first field,
-    // so it is the block's min id — deterministic under retries)
+    // min(p) is the star center (struct ordering is field-lexicographic and
+    // `id` is the first field, so it is the block's min id — deterministic
+    // under retries)
     val statAggs = Seq(count(lit(1)).as("n"), min($"p").as("pmin")) ++
       touching.map(t => sum(when(t($"p"), 1L).otherwise(0L)).as("nTouch")).toSeq
     val keyStats = rows.groupBy($"key").agg(statAggs.head, statAggs.tail: _*)
-    // delta mode: a block with no marked member cannot produce a touching
-    // pair — drop it at the thin stats, before the block rows rejoin
-    val liveStats =
-      if (touching.isDefined) keyStats.filter($"nTouch" >= 1L) else keyStats
-    val withN = rows.join(liveStats.select($"key", $"n", $"pmin"), "key")
+    val live = keyStats.filter($"n".between(2L, purgeLimit.toLong) &&
+      touching.fold(lit(true))(_ => $"nTouch" >= 1L))
+    val withN = rows.join(live.select($"key", $"n", $"pmin"), "key")
+    val marked = touching.fold(lit(true))(t => t($"x") || t($"y"))
 
-    // C(n,2) via TWO stock generators (posexplode, then explode of the
-    // tail slice) instead of a custom pair-combinations Generator: a custom
-    // Generator is CodegenFallback, which (a) evaluates row-at-a-time
-    // through interpreted eval and (b) breaks the WholeStageCodegen span
-    // around the hottest stream in every near-dup/blocking operator (the
-    // pre-dedup pair stream — 4M+ rows at bench sf0.1, ~quadratic in block
-    // size everywhere). explode/posexplode are ExplodeBase and stay inside
-    // codegen; the slice reads the grouped members array in place (no
-    // nested C(n,2) array is ever materialized — peak per outer row is the
-    // O(n) tail slice, same bound as the generator's O(n) element table).
-    // EXPLICIT-N round-robin repartition between the group assembly and the
-    // pair explode: the C(n,2) stream this stage generates is quadratic in
-    // block size, but AQE sizes every ENSURE_REQUIREMENTS exchange by its
-    // INPUT bytes (a few MB of member arrays) and coalesced the entire
-    // pair-generation + verify stage onto 1-2 tasks at bench sf0.1 (guide
-    // §2.5: AQE cannot see explode amplification). Two design notes from
-    // the measured A/Bs:
-    //  - a keyed repartition BEFORE the aggregate is not robust: when AQE's
-    //    replanning broadcasts the block-rows side of the stats join, the
-    //    streamed stats side already carries hash(key) partitioning and the
-    //    pinned keyed exchange is elided, putting the explode back on the
-    //    coalesced read. RoundRobinPartitioning with explicit N can never
-    //    be satisfied by an existing distribution, so it survives every
-    //    plan shape and evens out blocks of different sizes (§2.5).
-    //  - N sizing: with the transferTo stall fixed (Sessions survival
-    //    configs) an interleaved clean-canary fan-out sweep over 8/32/64
-    //    (tools/BenchExtra minima, 4 heavy queries) reads 11.38/11.34/11.89 s
-    //    — one-task-per-core is free at bench scale, and anything finer
-    //    only adds dispatch overhead. defaultParallelism gives exactly
-    //    that on any core count (the 900k-doc scaling points at local[2/8]
-    //    must NOT be capped below their cores — the pin is a floor against
-    //    AQE's byte-blind coalescing, never a ceiling on big streams);
-    //    numShufflePartitions/2 keeps a conf-proportional floor for
-    //    deployments whose pair streams genuinely need thousands of
-    //    partitions.
-    val spark2 = blocks.sparkSession
-    val nParts = math.max(spark2.sparkContext.defaultParallelism,
-      spark2.sessionState.conf.numShufflePartitions / 2)
-    val smallAll = withN
-      .filter($"n".between(2, cap))
-      .groupBy($"key").agg(collect_list($"p").as("members"))
-      .repartition(nParts)
-      .select($"members", posexplode($"members").as(Seq("i", "x")))
-      .select($"x",
-        explode(slice($"members", $"i" + lit(2), size($"members") - $"i" - 1)).as("y"))
-    // delta mode: full C(n,2) inside the (≤ cap²/2-bounded) block, filtered
-    // to touching pairs — identical pair semantics to the offline policy
-    // restricted to the batch
-    val smallPairs = touching.fold(smallAll)(t => smallAll.filter(t($"x") || t($"y")))
+    val nParts = math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions / 2)
+    val ord = rowSortKey.map(_ => $"s").getOrElse(sortKey($"p"))
+    // descending, so the growing frame (UNBOUNDED PRECEDING .. 1 PRECEDING)
+    // holds the members after the row; desc `lead` d is asc `lag` d, which
+    // gives the same chain links
+    val w = Window.partitionBy($"key").orderBy(ord.desc, $"p.id".desc)
+    val tail = collect_list(when($"n" <= cap, $"p"))
+      .over(w.rowsBetween(Window.unboundedPreceding, -1))
+    val leads = (1 to snWindow).map(d => lead($"p", d).over(w))
+    // delta mode: marked rows emit lead links at positions 0..w-1 and lag
+    // links after them; a lag link to a marked row is that row's lead link
+    val hot = touching.fold(array(leads: _*))(t =>
+      when(t($"p"), array(leads ++ (1 to snWindow).map(d => lag($"p", d).over(w)): _*)))
+    val ys = if (oversizedStar) tail else when($"n" <= cap, tail).otherwise(hot)
+    // star mode: oversized blocks take the stats-join path below, not the
+    // window
+    val windowed = (if (oversizedStar) withN.filter($"n" <= cap) else withN)
+      .repartition(nParts, $"key")
+      .select($"p".as("x"), $"n", ys.as("ys")) // window exprs first, generate second
+      .select($"x", $"n", posexplode($"ys").as(Seq("i", "y")))
+      .filter($"y".isNotNull && $"x.id" =!= $"y.id" && touching.fold(lit(true))(t =>
+        when($"n" <= cap, marked).otherwise($"i" < snWindow || !t($"y"))))
+      .select($"x", $"y")
+    val all = if (!oversizedStar) windowed else windowed.unionByName(
+      withN.filter($"n" > cap).select($"pmin".as("x"), $"p".as("y"))
+        .filter($"x.id" =!= $"y.id" && marked))
 
-    val hotPairs = if (oversizedStar) {
-      val star = withN
-        .filter($"n" > cap && $"n" <= purgeLimit)
-        .select($"pmin".as("x"), $"p".as("y"))
-        .filter($"x.id" =!= $"y.id")
-      touching.fold(star)(t => star.filter(t($"x") || t($"y")))
-    } else {
-      val ord = rowSortKey.map(_ => $"s").getOrElse(sortKey($"p"))
-      val wOrd = org.apache.spark.sql.expressions.Window
-        .partitionBy($"key").orderBy(ord, $"p.id")
-      val hotRows = withN.filter($"n" > cap && $"n" <= purgeLimit)
-      touching match {
-        case None =>
-          val leads = array((1 to snWindow).map(d => lead($"p", d).over(wOrd)): _*)
-          hotRows
-            .select($"p".as("x"), leads.as("ys")) // window exprs first, generate second
-            .select($"x", explode($"ys").as("y"))
-            .filter($"y".isNotNull)
-        case Some(t) =>
-          // every offline SN pair (i, i+d), d ≤ w, with a marked side is
-          // reachable from its marked endpoint via lead (marked = i) or lag
-          // (marked = i+d) — emitting both directions from marked rows only
-          // yields exactly the offline pair set ∩ touching (duplicates from
-          // marked-marked adjacency dedup downstream on canonical order)
-          val neigh = array(
-            (1 to snWindow).map(d => lead($"p", d).over(wOrd)) ++
-            (1 to snWindow).map(d => lag($"p", d).over(wOrd)): _*)
-          hotRows
-            .select($"p".as("x"), neigh.as("ys"), t($"p").as("xTouch"))
-            .filter($"xTouch") // after the window: neighborhoods see ALL rows
-            .select($"x", explode($"ys").as("y"))
-            .filter($"y".isNotNull)
-      }
-    }
-
-    val pairs = smallPairs.unionByName(hotPairs)
+    val pairs = all
       .select(
         when($"x.id" < $"y.id", $"x").otherwise($"y").as("a"),
         when($"x.id" < $"y.id", $"y").otherwise($"x").as("b"))

@@ -106,6 +106,27 @@ object Checkpoints {
     (schema, read.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted)
   }
 
+  /** A digest of `(path, length, mtime)` over every file `df` scans, sorted —
+    * taken from the file statuses its relations' file indexes already
+    * listed (no job, no per-file call); None when `df` scans no file (an
+    * in-memory or generated table). A stage over a file scan adds it to its
+    * fingerprint, so an input overwritten in place is recomputed, not
+    * resumed from the old corpus's snapshot. */
+  def inputFilesDigest(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+      PartitioningAwareFileIndex}
+    val files = df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation
+    }.collect { case fs: HadoopFsRelation => fs.location }
+      .collect { case idx: PartitioningAwareFileIndex => idx.allFiles() }.flatten
+      .map(st => s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}\n").distinct.sorted
+    if (files.isEmpty) None else {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      files.foreach(f => md.update(f.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      Some(s"${files.length} files, sha256 ${md.digest().map(b => f"$b%02x").mkString}")
+    }
+  }
+
   /**
    * Run-or-resume a stage: if a committed snapshot of this stage with this
    * fingerprint, built from the snapshots now committed in the `inputs`

@@ -99,8 +99,10 @@ object ErPipeline {
   }
 
   /** Checkpointed variant: every stage is a committed snapshot (resume-safe;
-    * see [[Config]] for the fingerprint) that names the stages it was built
-    * from, so a recomputed stage recomputes every stage after it.
+    * see [[Config]] for the fingerprint, to which the pages stage adds
+    * [[Checkpoints.inputFilesDigest]] of a file-scan input) that names the
+    * stages it was built from, so a recomputed stage recomputes every stage
+    * after it.
     * Feature/pair/edge snapshots live in id space — the features snapshot
     * keeps BOTH the url and the derived id column, so downstream consumers
     * (e.g. Main's candidate-miss diagnostics) can translate pair snapshots
@@ -112,7 +114,12 @@ object ErPipeline {
       Checkpoints.stage(spark, s"$workDir/$name", name, cfg.fingerprint,
         inputs.map(i => s"$workDir/$i"))(df)
 
-    val pagesT = stage("pages")(pages.toDF())
+    // the pages stage has no committed input to name: when it copies a file
+    // scan, the scanned files are its input, so a corpus overwritten in the
+    // same path recomputes it (and, through its new snapshot, every stage)
+    val pagesFp = Checkpoints.inputFilesDigest(pages.toDF())
+      .fold(cfg.fingerprint)(d => s"${cfg.fingerprint} pages.inputFiles=$d")
+    val pagesT = Checkpoints.stage(spark, s"$workDir/pages", "pages", pagesFp)(pages.toDF())
 
     val feats = stage("features", "pages") {
       Blocking.features(

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
@@ -24,10 +24,13 @@ import graft.schema.Page
  *
  * A target is a [[graft.SparkEntry.queries]] or [[graft.SparkEntry.stress]]
  * name, read from the sf directory `<dir>` under the
- * [[graft.ops.Sessions.bench]] session, or `er`: [[ErPipeline.run]] over the
+ * [[graft.ops.Sessions.bench]] session, or one of the ER targets over the
  * page-parquet corpus at `<dir>` (e.g. one written by `tools/GenCorpus`)
  * under the [[graft.ops.Sessions.scaling]] session with 2×cores shuffle
- * partitions, the partition count ScalingSuite gives a single-size run.
+ * partitions, the partition count ScalingSuite gives a single-size run:
+ * `er` is [[ErPipeline.run]]; `er_ckpt` is [[ErPipeline.runCheckpointed]]
+ * into a fresh temporary workDir per run (so every run computes every
+ * stage; none resumes), removed once the run's output has been used.
  *
  *  - `profile` counts the target `runs` times and reports the
  *    LAST (warm) run: every job with its wall and the driver-side gaps
@@ -45,15 +48,34 @@ import graft.schema.Page
 object Inspect {
 
   val ErTarget = "er"
+  val ErCkptTarget = "er_ckpt"
+  private val ErTargets = Set(ErTarget, ErCkptTarget)
 
   private def targets: Map[String, (SparkSession, String) => DataFrame] =
     SparkEntry.queries ++ SparkEntry.stress + (ErTarget -> ((s: SparkSession, dir: String) =>
-      ErPipeline.run(s.read.parquet(dir).as[Page](Encoders.product[Page]))))
+      ErPipeline.run(pages(s, dir))))
 
-  /** The target named `name`; unknown names fail listing every valid one. */
-  private def target(name: String): (SparkSession, String) => DataFrame =
-    targets.getOrElse(name, throw new IllegalArgumentException(
-      s"unknown target '$name'; valid targets: ${targets.keys.toSeq.sorted.mkString(", ")}"))
+  private def pages(s: SparkSession, dir: String) =
+    s.read.parquet(dir).as[Page](Encoders.product[Page])
+
+  /** Fails on an unknown target name, listing every valid one. */
+  private def requireTarget(name: String): Unit =
+    if (name != ErCkptTarget && !targets.contains(name)) throw new IllegalArgumentException(
+      s"unknown target '$name'; valid targets: " +
+        (targets.keys.toSeq :+ ErCkptTarget).sorted.mkString(", "))
+
+  /** Hands target `name`'s frame over `dir` to `use`. `er_ckpt` runs into a
+    * fresh temporary workDir, removed once `use` returns. */
+  private def using[T](spark: SparkSession, dir: String, name: String)(use: DataFrame => T): T =
+    if (name != ErCkptTarget) use(targets(name)(spark, dir)) else {
+      val work = Files.createTempDirectory("graft-inspect")
+      try use(ErPipeline.runCheckpointed(spark, pages(spark, dir), work.toString))
+      finally {
+        val tree = Files.walk(work)
+        try tree.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+        finally tree.close()
+      }
+    }
 
   /** Epoch-ms times; `endMs` is -1 when no end event arrived. */
   final case class Job(id: Int, startMs: Long, endMs: Long, stages: Int, tasks: Int,
@@ -126,7 +148,7 @@ object Inspect {
 
   def profile(spark: SparkSession, dir: String, name: String, runs: Int): Profile = {
     require(runs >= 1, s"runs must be >= 1 (got $runs)")
-    val run = target(name)
+    requireTarget(name)
     val sc = spark.sparkContext
     val tag = s"warm-${System.nanoTime()}"
     val rec = new Recorder(tag)
@@ -140,7 +162,7 @@ object Inspect {
           startMs = System.currentTimeMillis()
         }
         val t0 = System.nanoTime()
-        try rows = run(spark, dir).count()
+        try rows = using(spark, dir, name)(_.count())
         finally sc.setLocalProperty(RunKey, null)
         (System.nanoTime() - t0) / 1e9
       }
@@ -180,7 +202,7 @@ object Inspect {
   def explain(spark: SparkSession, dir: String, outDir: String, names: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val run = target(name)
+      requireTarget(name)
       val finals = new ConcurrentLinkedQueue[String]()
       val listener = new QueryExecutionListener {
         override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -189,9 +211,11 @@ object Inspect {
       }
       spark.listenerManager.register(listener)
       try {
-        val df = run(spark, dir)
-        val plan = df.queryExecution.explainString(FormattedMode)
-        df.count()
+        val plan = using(spark, dir, name) { df =>
+          val plan = df.queryExecution.explainString(FormattedMode)
+          df.count()
+          plan
+        }
         drain(spark)
         val path = Paths.get(outDir, s"$name.txt")
         Files.writeString(path, plan +
@@ -203,9 +227,9 @@ object Inspect {
   }
 
   def show(spark: SparkSession, dir: String, name: String): Unit = {
-    val run = target(name)
+    requireTarget(name)
     val t0 = System.nanoTime()
-    run(spark, dir).show(50, truncate = false)
+    using(spark, dir, name)(_.show(50, truncate = false))
     println(f"[inspect] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
   }
 
@@ -225,8 +249,8 @@ object Inspect {
           "       Inspect show <dir> <target> [cores]")
         sys.exit(2)
     }
-    names.foreach(target) // unknown names fail before Spark starts
-    val spark = (if (names.contains(ErTarget)) Sessions.scaling(cores, cores * 2, "graft-inspect")
+    names.foreach(requireTarget) // unknown names fail before Spark starts
+    val spark = (if (names.exists(ErTargets)) Sessions.scaling(cores, cores * 2, "graft-inspect")
       else Sessions.bench(cores, "graft-inspect")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try mode(spark) finally spark.stop()

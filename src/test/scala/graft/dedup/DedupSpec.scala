@@ -154,6 +154,69 @@ class DedupSpec extends SparkSpec {
     outs.tail.foreach(o => assert(o == outs.head, "partitioning changed star pairs"))
   }
 
+  test("blockPairs emits no self-pair when a (key, id) row occurs twice") {
+    import spark.implicits._
+    // "s": a small block (n = 3 ≤ cap) holding id a twice; "h": a hot block
+    // (n = 9 > cap) holding m4 twice, adjacent in block order
+    val rows = Seq(("s", "a"), ("s", "a"), ("s", "b")) ++
+      ((0 until 8).map(i => ("h", s"m$i")) :+ (("h", "m4")))
+    val df = rows.toDF("key", "id")
+    for (star <- Seq(false, true); touch <- Seq(false, true)) {
+      val payload = if (touch) struct(col("id"), lit(true).as("fresh")) else struct(col("id"))
+      val pairs = Dedup.blockPairs(df.withColumn("fresh", lit(true)), payload,
+          cap = 4, snWindow = 2, oversizedStar = star,
+          touching = if (touch) Some(p => p("fresh")) else None)
+        .select(col("a.id"), col("b.id")).collect().map(r => (r.getString(0), r.getString(1)))
+      val mode = s"star=$star touching=$touch"
+      assert(pairs.exists(_ == (("a", "b"))) && pairs.exists(_._1.startsWith("m")), mode)
+      assert(pairs.forall { case (a, b) => a < b }, s"$mode: self or non-canonical pair in ${pairs.toSeq}")
+    }
+  }
+
+  test("blockPairs equals a driver-side reference over every block-size branch") {
+    import spark.implicits._
+    val (cap, purge, w) = (4, 7, 2)
+    val rnd = new scala.util.Random(23)
+    val pool = (0 until 40).map(i => f"d$i%02d")
+    def fresh(id: String): Boolean = id.last.asDigit % 3 == 0
+    // two blocks of each size around both thresholds, members drawn without
+    // replacement from a shared pool (a doc sits in several blocks), sort
+    // values with ties (broken by id); plus a null-key "block" of 3
+    val sizes = Seq(1, 2, cap, cap + 1, purge, purge + 1)
+    val blocks: Seq[(Option[Long], Seq[(String, Int)])] =
+      sizes.flatMap(n => Seq.fill(2)(n)).zipWithIndex.map { case (n, k) =>
+        (Some(k.toLong), rnd.shuffle(pool).take(n).map(id => (id, rnd.nextInt(3))))
+      } :+ ((None, pool.take(3).map(id => (id, 0))))
+    val rows = blocks.flatMap { case (k, ms) => ms.map { case (id, s) => (k, id, s, fresh(id)) } }
+      .toDF("key", "id", "s", "fresh")
+
+    def reference(star: Boolean, touch: Boolean): Seq[(String, String)] =
+      blocks.collect { case (Some(_), ms) => ms }.flatMap { ms =>
+        val n = ms.size
+        val order = ms.sortBy { case (id, s) => (s, id) }.map(_._1)
+        val raw: Seq[(String, String)] =
+          if (n < 2 || n > purge) Nil
+          else if (n <= cap) order.combinations(2).map(c => (c(0), c(1))).toSeq
+          else if (star) order.filter(_ != order.min).map(m => (order.min, m))
+          else for (i <- order.indices; d <- 1 to w if i + d < n) yield (order(i), order(i + d))
+        raw.map { case (a, b) => if (a < b) (a, b) else (b, a) }
+          .filter { case (a, b) => !touch || fresh(a) || fresh(b) }
+      }.sorted
+
+    val layouts = Seq(rows.repartition(1), rows.repartition(5, col("id")))
+    for (star <- Seq(false, true); touch <- Seq(false, true); (df, li) <- layouts.zipWithIndex) {
+      val payload = if (touch) struct(col("id"), col("fresh")) else struct(col("id"))
+      val got = Dedup.blockPairs(df, payload, cap, purge, w, oversizedStar = star,
+          touching = if (touch) Some(p => p("fresh")) else None, rowSortKey = Some(col("s")))
+        .select(col("a.id"), col("b.id")).collect()
+        .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+      val want = reference(star, touch)
+      val mode = s"star=$star touching=$touch layout=$li"
+      assert(want.nonEmpty, mode)
+      assert(got == want, mode)
+    }
+  }
+
   test("simhash pairs detect planted near-dups") {
     val pairs = Dedup.simhashNearDupPairs(docs, "doc_id", "text",
         Dedup.SimHashConfig(maxHamming = 8, segments = 16))

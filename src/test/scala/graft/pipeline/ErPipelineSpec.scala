@@ -232,6 +232,28 @@ class ErPipelineSpec extends SparkSpec {
     p.unpersist()
   }
 
+  test("a corpus overwritten at the same path is not resumed from the old pages snapshot") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-er-input").toString
+    val corpus = Files.createTempDirectory("graft-er-corpus").resolve("pages").toString
+    def read = spark.read.parquet(corpus).as[graft.schema.Page]
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(String, String)].collect().sorted.toSeq
+    CorpusGen.pages(spark, 300L, seed = 21L).write.parquet(corpus)
+    val a = rows(ErPipeline.runCheckpointed(spark, read, dir))
+    CorpusGen.pages(spark, 400L, seed = 22L).write.mode("overwrite").parquet(corpus)
+    val want = rows(ErPipeline.run(read))
+    assert(want != a, "the two corpora must cluster differently")
+    assert(rows(ErPipeline.runCheckpointed(spark, read, dir)) == want,
+      "resumed the pages snapshot of the overwritten corpus")
+    // an unchanged input still resumes: no stage is rewritten
+    val snapshots = ckptStages.map(s => graft.ops.Checkpoints.readManifest(s"$dir/$s").map(_.snapshot))
+    assert(rows(ErPipeline.runCheckpointed(spark, read, dir)) == want)
+    assert(ckptStages.map(s => graft.ops.Checkpoints.readManifest(s"$dir/$s").map(_.snapshot)) ==
+      snapshots)
+  }
+
   test("batch-incremental ER ≡ full rebuild on corpus ∪ batch") {
     import org.apache.spark.sql.functions._
     // corpus-independent features (DF-stops off) + all-pairs blocking

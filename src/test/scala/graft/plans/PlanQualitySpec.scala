@@ -139,24 +139,55 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("candidatePairs block sizes ride agg+join — no count window in the plan") {
-    // the whole-group `count(*) over (partition by key)` window is the
-    // stage shape that OOM'd the 6M-doc dress rehearsal (window buffers and
-    // the small-branch collect_list hash aggregate compete for one task
-    // memory pool, BASELINE.md lesson 5); block stats must come from the
-    // partial-aggregable groupBy+join in Dedup.blockPairs. The only window
-    // allowed is the sorted-neighborhood lead().
+    // Dedup.blockPairs: thin per-key stats (one partial-aggregable groupBy,
+    // never a whole-group `count(*) over (partition by key)` window, the
+    // stage shape that OOM'd the 6M-doc dress rehearsal, BASELINE.md
+    // lesson 5), joined back, an explicit-N keyed exchange, then ONE window:
+    // collect_list only over a GROWING rows frame (UNBOUNDED PRECEDING up to
+    // a row before the current one), which Spark extends row by row — a
+    // bounded sliding frame re-aggregates its whole frame for every row —
+    // plus lead/lag. No collect_list group aggregate of whole blocks and no
+    // round-robin exchange. The block table is checkpointed so only pair
+    // generation is in the plan.
+    import org.apache.spark.sql.catalyst.expressions.{FrameLessOffsetWindowFunction, Literal,
+      RowFrame, SpecifiedWindowFrame, UnboundedPreceding, WindowExpression}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val pages = CorpusGen.pages(spark, 300L, seed = 42L, partitions = 2)
     val feats = Blocking.features(pages, Blocking.Config())
-    val pairs = Blocking.candidatePairs(Blocking.blockKeys(feats), Blocking.Config())
-    val windows = pairs.queryExecution.sparkPlan.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    val blocks = Blocking.blockKeys(feats).localCheckpoint(eager = true)
+    val pairs = Blocking.candidatePairs(blocks, Blocking.Config())
+    val qe = pairs.queryExecution
+
+    val stats = qe.optimizedPlan.collect { case a: Aggregate if a.output.exists(_.name == "n") => a }
+    assert(stats.size == 1, s"expected one block-stats aggregate:\n${qe.optimizedPlan}")
+
+    val windows = qe.sparkPlan.collect { case w: WindowExec => w }
+    assert(windows.size == 1, s"expected one pair window:\n${qe.sparkPlan}")
+    val wexprs = windows.head.windowExpression.flatMap(_.collect { case we: WindowExpression => we })
+    assert(wexprs.nonEmpty)
+    wexprs.foreach { we =>
+      val s = we.sql.toLowerCase
+      assert(!s.contains("count("), s"block-size count must not be a window: $s")
+      we.windowFunction match {
+        case _: FrameLessOffsetWindowFunction => // lead / lag
+        case _ => we.windowSpec.frameSpecification match {
+          case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, Literal(hi: Int, _)) =>
+            assert(hi < 0, s"growing frame must end before the current row: $s")
+          case f => fail(s"expected a growing ROWS frame, got $f in $s")
+        }
+      }
     }
-    assert(windows.nonEmpty, "expected the sorted-neighborhood lead() window")
-    windows.foreach { w =>
-      val exprs = w.windowExpression.mkString(";").toLowerCase
-      assert(exprs.contains("lead"), s"unexpected window expression: $exprs")
-      assert(!exprs.contains("count("), s"block-size count must not be a window: $exprs")
+
+    val collectAggs = qe.sparkPlan.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[CollectList]) => a
     }
+    assert(collectAggs.isEmpty, s"collect_list group aggregate in the pair plan:\n${qe.sparkPlan}")
+    pairs.collect() // the final adaptive plan
+    assert(!qe.executedPlan.toString.contains("RoundRobinPartitioning"),
+      s"round-robin exchange in the pair plan:\n${qe.executedPlan}")
   }
 
   test("minhash at verifyJaccard=1.0 plans without the LSH tier") {

@@ -21,9 +21,29 @@ class InspectSpec extends SparkSpec {
     }
   }
 
+  test("er_ckpt profiles a fresh checkpointed run per run and removes its workDirs") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft-inspect-corpus")
+    val corpus = root.resolve("pages").toString
+    graft.ingest.CorpusGen.pages(spark, 300L, seed = 3L).write.parquet(corpus)
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def workDirs = Files.list(tmp).toArray.map(_.toString)
+      .filter(_.contains("graft-inspect")).filterNot(_.contains("corpus")).toSet
+    val before = workDirs
+    try {
+      val p = Inspect.profile(spark, corpus, Inspect.ErCkptTarget, 2)
+      assert(p.rows == 300L, "one (url, cluster_id) row per page")
+      // the warm run computed (wrote) every stage: it did not resume the first
+      val writes = p.jobs.count(_.site.contains("Checkpoints.scala"))
+      assert(writes >= 5, s"expected the five stage writes in the warm run: ${p.jobs}")
+      assert(workDirs == before, s"workDirs left behind: ${workDirs -- before}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("an unknown target fails listing the valid names") {
     val e = intercept[IllegalArgumentException](Inspect.profile(spark, dir, "q0_nope", 1))
-    Seq("q0_nope", "q1_agg", "dedup_simhash_full", "dedup_minhash_full", Inspect.ErTarget)
+    Seq("q0_nope", "q1_agg", "dedup_simhash_full", "dedup_minhash_full", Inspect.ErTarget,
+        Inspect.ErCkptTarget)
       .foreach(n => assert(e.getMessage.contains(n), e.getMessage))
   }
 }
