@@ -1,10 +1,12 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /**
  * Shared SparkSession configuration for every production entry point (Main,
- * Bench, Verify, ScalingSuite, DressRehearsal).
+ * Bench, Verify, ScalingSuite, the rehearsals, Inspect and the erbench
+ * runner).
  *
  * Two sizing recipes sit on top of [[builder]], each kept as data so
  * SessionsSpec can pin it:
@@ -44,8 +46,42 @@ import org.apache.spark.sql.SparkSession
  *    ≲ 250 MB of url pairs, far less with 128-bit hash ids) and the ANN
  *    top-up collects bounded query chunks; a run near those budgets must
  *    not die on the 1g default ceiling.
+ *
+ * Two more entries are host and per-call costs, not rehearsal lessons:
+ * `spark.file.transferTo=false` (reason at the entry) and
+ * `spark.sql.codegen.cache.maxEntries` ([[CodegenCacheMaxEntries]]), which
+ * lets a long-lived JVM compile each ER plan once instead of on every call.
+ * The latter is a STATIC conf: Spark builds its generated-class cache once
+ * per JVM, from the conf of the session active at the first code
+ * generation, so the first session in a JVM fixes the size. A library
+ * caller who builds their own session instead of using [[builder]] gets
+ * Spark's 100 entries, and every warm ER call recompiles most of its plan.
  */
 object Sessions {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100).
+    *
+    * The two ER entry points together generate more classes than 100, so
+    * with the default every warm call evicted and recompiled most of its
+    * plan: `Inspect profile` on 4 cores counted 80-81 classes per warm
+    * `runCheckpointed` call and 28-49 per warm `run` call (0.5-0.9 s of
+    * Janino compile time each), and a warm round of both in the test
+    * session 158. The compiles run in the first task of every stage, so
+    * they were part of the fixed per-call floor, owned by no ER layer.
+    *
+    * Sized as twice the largest class working set measured: the distinct
+    * classes compiled in one JVM under an unbounded cache were 477 for a
+    * traced erbench er_batch run, 473 for a traced er_hotkeys_ckpt run
+    * (each with its staged layer calls and extra operators) and 1,192 for
+    * one `graft.Verify` pass over sf0.01 (all 66 queries); 2 × 1,192,
+    * rounded up. Classes stay loaded while cached, so metaspace grows with
+    * the working set, not with the cap: at the end of a whole erbench JVM
+    * (after a GC) 163.1 → 163.5 MB on er_hotkeys_ckpt and 161.3 → 161.5 MB
+    * on er_batch, and 176.6 → 184.9 MB after the Verify pass, at 100 →
+    * 2400 entries.
+    */
+  final val CodegenCacheMaxEntries = 2400
 
   /** The dress-rehearsal survival settings (see object doc), as data so
     * SessionsSpec can pin them — a refactor that drops one must fail a
@@ -67,7 +103,9 @@ object Sessions {
     // sane mmap cost the difference is a wash for the KB-to-MB segment
     // sizes this engine shuffles (transferTo's zero-copy win is for
     // GB-scale segments).
-"spark.file.transferTo" -> "false")
+"spark.file.transferTo" -> "false",
+    // reason and sizing at CodegenCacheMaxEntries
+    StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key -> CodegenCacheMaxEntries.toString)
 
   /** Apply [[survivalConfigs]]. Used by [[builder]]; exposed separately so
     * tools that build exotic sessions (e.g. the rehearsal itself) can

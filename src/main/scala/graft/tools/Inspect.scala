@@ -5,8 +5,10 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -37,8 +39,15 @@ import graft.schema.Page
  *    between jobs (planning, collects, broadcast builds), and every stage
  *    with start/end offsets from the run start, wall, summed task run time,
  *    CPU, GC, tasks, shuffle read/write and the physical operator names
- *    (rdd scopes, which AQE hides from stage call sites). Every graft
- *    session runs with the Spark UI off; this is its replacement.
+ *    (rdd scopes, which AQE hides from stage call sites), and the classes
+ *    Spark's code generator compiled during that run with their compile
+ *    time. While the plans' classes fit the codegen cache
+ *    ([[graft.ops.Sessions.CodegenCacheMaxEntries]]) a warm run compiles
+ *    only what no earlier run planned (a call that picks a new AQE plan
+ *    variant); most of a plan's classes recompiled on every warm run show
+ *    the working set outgrew the cache.
+ *    Every graft session runs with the Spark UI off; this is its
+ *    replacement.
  *  - `explain` writes `<outDir>/<target>.txt` per target: the formatted
  *    plan, then the final plan of every query execution that building and
  *    counting the target ran — including eager-checkpoint interiors, which
@@ -83,10 +92,13 @@ object Inspect {
   final case class Stage(id: Int, startMs: Long, endMs: Long, tasks: Int, runMs: Long,
                          cpuNs: Long, gcMs: Long, shuffleReadBytes: Long,
                          shuffleWriteBytes: Long, ops: String)
-  /** `rows` and the jobs and stages are the last run's; `startMs` is when it
-    * began. */
+  /** `rows`, the jobs, the stages and the codegen counts are the last
+    * run's; `startMs` is when it began. `compiles` and `compileMs` count every
+    * class this JVM compiled during the run: all of them under a local
+    * master, the driver's alone on a cluster. */
   final case class Profile(rows: Long, seconds: Seq[Double], startMs: Long,
-                           jobs: Seq[Job], stages: Seq[Stage])
+                           jobs: Seq[Job], stages: Seq[Stage], compiles: Long,
+                           compileMs: Double)
 
   /** Job property marking the jobs a [[Recorder]] keeps. */
   private val RunKey = "graft.inspect.run"
@@ -153,22 +165,28 @@ object Inspect {
     val tag = s"warm-${System.nanoTime()}"
     val rec = new Recorder(tag)
     sc.addSparkListener(rec)
+    // classes compiled (CodegenMetrics) and their summed compile time (ns)
+    def codegen() = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     try {
       var rows = 0L
       var startMs = 0L
+      var codegen0 = (0L, 0L)
       val seconds = (1 to runs).map { i =>
         if (i == runs) {
           sc.setLocalProperty(RunKey, tag)
           startMs = System.currentTimeMillis()
+          codegen0 = codegen()
         }
         val t0 = System.nanoTime()
         try rows = using(spark, dir, name)(_.count())
         finally sc.setLocalProperty(RunKey, null)
         (System.nanoTime() - t0) / 1e9
       }
+      val codegen1 = codegen()
       drain(spark)
       Profile(rows, seconds, startMs, rec.jobs.values.asScala.toSeq.sortBy(_.startMs),
-        rec.stages.values.asScala.toSeq.sortBy(s => (s.startMs, s.id)))
+        rec.stages.values.asScala.toSeq.sortBy(s => (s.startMs, s.id)),
+        codegen1._1 - codegen0._1, (codegen1._2 - codegen0._2) / 1e6)
     } finally sc.removeSparkListener(rec)
   }
 
@@ -196,6 +214,7 @@ object Inspect {
     }
     out += f"TOTAL jobs=${p.jobs.size} stages=${p.stages.size} " +
       f"run=${p.stages.map(_.runMs).sum / 1e3}%.2f s cpu=${p.stages.map(_.cpuNs).sum / 1e9}%.2f s"
+    out += f"CODEGEN of the last run: compiled=${p.compiles} classes in ${p.compileMs}%.0f ms"
     out.result().mkString("\n")
   }
 

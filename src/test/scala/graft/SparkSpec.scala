@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for suites (one per suite, lazy). */
@@ -17,6 +18,10 @@ object SparkSpec {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the production codegen cache size (a static conf: Spark sizes the
+      // cache at the JVM's first code generation)
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key,
+        graft.ops.Sessions.CodegenCacheMaxEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

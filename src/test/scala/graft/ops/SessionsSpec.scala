@@ -3,8 +3,9 @@ package graft.ops
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the production-session survival configs (BASELINE.md rehearsal
-  * lessons): every entry point builds through Sessions.builder, so these
-  * four settings reaching every session reduces to this map being right. */
+  * lessons, and two host and per-call costs): every entry point builds
+  * through Sessions.builder, so these six settings reaching every session
+  * reduces to this map being right. */
 class SessionsSpec extends AnyFunSuite {
 
   test("survival configs carry the rehearsal + host-I/O lessons") {
@@ -21,7 +22,12 @@ class SessionsSpec extends AnyFunSuite {
       // round-6 lesson: the bypass shuffle writer's transferTo concat
       // mmaps/unmaps every per-reducer segment — a VM-exit storm on this
       // guest (thread dumps: map stages 13 s task time, 1.7 s CPU)
-      "spark.file.transferTo" -> "false"))
+      "spark.file.transferTo" -> "false",
+      // a warm ER call recompiled most of its plan: run + runCheckpointed
+      // generate more classes than the default 100-entry codegen cache
+      // holds; 2400 is twice the largest working set measured in one JVM
+      // (1,192 classes, a graft.Verify sf0.01 pass)
+      "spark.sql.codegen.cache.maxEntries" -> "2400"))
   }
 
   /** A builder's option map. A second SparkContext can't be created in the

@@ -254,6 +254,33 @@ class ErPipelineSpec extends SparkSpec {
       snapshots)
   }
 
+  test("a warm JVM compiles each ER plan once: a third round generates no class") {
+    // Spark's codegen cache must hold the class working set of both entry
+    // points (Sessions.CodegenCacheMaxEntries); at the default 100 entries
+    // every warm call recompiled most of its plan. A second call can still
+    // compile classes the first did not, so the third round is the one held
+    // to zero.
+    import java.nio.file.Files
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-er-codegen")
+    val corpus = root.resolve("pages").toString
+    CorpusGen.pages(spark, 400L, seed = 31L).write.parquet(corpus)
+    val read = spark.read.parquet(corpus).as[graft.schema.Page]
+    def round(i: Int): Unit = {
+      ErPipeline.run(read).as[(String, String)].collect()
+      ErPipeline.runCheckpointed(spark, read, root.resolve(s"work-$i").toString)
+        .as[(String, String)].collect()
+    }
+    try {
+      round(1); round(2)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      round(3)
+      val again = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+      assert(again == 0, s"the third round of run + runCheckpointed compiled $again classes")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("batch-incremental ER ≡ full rebuild on corpus ∪ batch") {
     import org.apache.spark.sql.functions._
     // corpus-independent features (DF-stops off) + all-pairs blocking

@@ -18,6 +18,9 @@ class InspectSpec extends SparkSpec {
       assert(p.jobs.forall(_.endMs >= 0), s"$name missed a job end")
       val report = Inspect.report(name, p)
       assert(report.contains("  JOB ") && report.contains("  STAGE "))
+      assert(p.compiles >= 0 && p.compileMs >= 0 && (p.compiles > 0 || p.compileMs == 0),
+        s"$name codegen deltas: ${p.compiles} classes, ${p.compileMs} ms")
+      assert(report.contains(s"CODEGEN of the last run: compiled=${p.compiles} classes"))
     }
   }
 
