@@ -457,7 +457,7 @@ object Ann {
       explode(srp_band_keys(col("vec"), cfg.bands, cfg.bits, cfg.seed)).as("key"),
       col("id"))
     val thin = graft.dedup.Dedup.blockPairs(blocks, struct(col("id")), cfg.maxBlock,
-        cfg.purgeLimit, cfg.snWindow, p => p("id"))
+        cfg.purgeLimit, cfg.snWindow)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     // bare build sides → one broadcast for both vector-attach joins

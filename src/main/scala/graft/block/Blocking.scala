@@ -262,11 +262,11 @@ object Blocking {
       else identity
     // mention rides as the ROW sort key, never in the payload: the window's
     // tail frame copies the payload up to maxBlock times per member, and
-    // only the ids are ever emitted (see Dedup.blockPairs' rowSortKey doc).
+    // only the ids are ever emitted (see Dedup.blockPairs' sortKey doc).
     graft.dedup.Dedup.blockPairs(
         blocks.select($"key", $"url".as("id"), $"mention"),
         struct($"id"), cfg.maxBlock, cfg.purgeLimit, cfg.snWindow,
-        rowSortKey = Some(struct($"mention", tiebreak($"id"))))
+        sortKey = Some(struct($"mention", tiebreak($"id"))))
       .select($"a.id".as("url_a"), $"b.id".as("url_b"))
       .dropDuplicates("url_a", "url_b") // A2 analog: dedup multiply-blocked pairs
   }
@@ -294,7 +294,7 @@ object Blocking {
         blocks.select($"key", $"url".as("id"), $"mention", $"fresh"),
         struct($"id", $"fresh"), cfg.maxBlock, cfg.purgeLimit, cfg.snWindow,
         touching = Some(p => p.getField("fresh")),
-        rowSortKey = Some(struct($"mention", tiebreak($"id"))))
+        sortKey = Some(struct($"mention", tiebreak($"id"))))
       .select($"a.id".as("url_a"), $"b.id".as("url_b"))
       .dropDuplicates("url_a", "url_b")
   }

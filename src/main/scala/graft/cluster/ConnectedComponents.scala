@@ -1,9 +1,12 @@
 package graft.cluster
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+
+import graft.functions.GraftFunctions.id128
 
 /**
  * Transitive clustering (SURVEY.md §2.5 A6): iterative large-star/small-star
@@ -40,22 +43,19 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
  *    iterations at bench scale). Same bounded-driver-step class as the
  *    ANN top-up chunking (graft.ann.Ann.completeTopK).
  *
- * Node ids come in exactly two types, one per id discipline in use:
- *  - STRING urls (cc_components query, dedup groups, batch-incremental
- *    ER): self-describing, zero-collision by construction, ~60-80 B per
- *    shuffled id;
- *  - 128-bit hash structs (the ER hot path, graft.pipeline.ErPipeline):
- *    STRUCT<h1:BIGINT,h2:BIGINT> = 16 B per id — the same two-lane xxhash64
- *    identity the dedup tier trusts (collision math at
- *    graft.dedup.Dedup.contentKey128: ~10^-15 expected corpus-wide false
- *    merges at 10^12 docs), with urls restored once at pipeline output.
- * The star loop's edge-set operations (window min, least/greatest,
- * distinct, xxhash64 checksum) are type-agnostic; the driver-side local
- * finish has one concrete implementation per type, and [[converge]]
- * rejects any other id type up front. cluster_id is the component's
- * minimum id under Spark's ordering for the id type (deterministic
- * labeling, SURVEY.md §7.4.4); string-id callers get the lexicographic min
- * url.
+ * One node-id type: the 128-bit hash struct STRUCT<h1:BIGINT,h2:BIGINT>
+ * of [[graft.functions.GraftFunctions.id128]], 16 B per shuffled id — the
+ * same two-lane xxhash64 identity the dedup tier trusts (collision math at
+ * graft.dedup.Dedup.contentKey128: ~10^-15 expected corpus-wide false
+ * merges at 10^12 docs). The star loop and the driver-side local finish
+ * see only these structs, and [[assignAllKeyed]] rejects any other edge
+ * type up front; its cluster_id is the component's minimum struct id. The
+ * ER hot path keys on the structs from blocking onward. The string entry
+ * points ([[run]], [[assignAll]], [[incremental]]) hash their url ids in at
+ * the edge, and [[clusterByMinUrl]] labels each component by Spark's `min`
+ * over its original urls (UTF-8 byte order), the labelling ER's output
+ * uses too — so a label never depends on which finish closed the
+ * component (deterministic labeling, SURVEY.md §7.4.4).
  */
 object ConnectedComponents {
 
@@ -68,18 +68,22 @@ object ConnectedComponents {
     * scaling measurement pays at every cluster size). */
   private val ccFanIn = 16
 
-  /** Target thin-edge rows per loop shuffle partition (~60-100 MB of
-    * (url, url) pairs). */
+  /** Target thin-edge rows per loop shuffle partition (~16 MB of 16-byte
+    * id pairs). */
   private val rowsPerPartition = 500000L
 
+  /** Star rounds before the loop gives up. Star contraction halves the
+    * component diameter per round, so 50 rounds cover diameters ~2^50. */
+  private val maxIterations = 50
+
   /** Driver budget for the union-find finish: edge sets at or below this
-    * row count are collected and closed in memory. 2M (url, url) pairs at
-    * ~60 B/url is ≲ 250 MB of driver heap transiently — the same order as
-    * one collected ANN top-up chunk, and two orders below the driver heap
-    * any production Spark cluster runs with. Callers pass 0 as
-    * `localEdgeBudget` to disable the local finish (distributed star rounds
-    * all the way to fixpoint — the path the property tests pin against the
-    * union-find oracle). */
+    * row count are collected and closed in memory. 2M id pairs collect as
+    * 64 MB of primitive longs (plus the probe tables built from them) —
+    * the same order as one collected ANN top-up chunk, and two orders
+    * below the driver heap any production Spark cluster runs with.
+    * Callers pass 0 as `localEdgeBudget` to disable the local finish
+    * (distributed star rounds all the way to fixpoint — the path the
+    * property tests pin against the union-find oracle). */
   private[cluster] val localFinishEdges = 2000000L
 
   /** Shuffle-partition count for one loop iteration, sized from the CURRENT
@@ -96,67 +100,96 @@ object ConnectedComponents {
     math.max(ccFanIn.toLong, math.min(byData, 200000L)).toInt
   }
 
-  /** Result of [[converge]]: `assign` maps child url → component root for
-    * every NON-ROOT node in the edge set ( + root self-rows iff
-    * `rootsIncluded` — the local-finish path knows them for free, the
-    * distributed fixpoint does not list roots as children). `lookup` is the
-    * local-finish broadcast labeling as an expression builder (absent node →
-    * itself), letting [[assignAll]] label a node universe with a narrow map
-    * instead of a join. `cleanup` frees checkpoint blocks / broadcasts and
-    * must run only after the caller has materialized what it needs. */
-  private final case class Converged(
-      assign: DataFrame,
-      rootsIncluded: Boolean,
-      lookup: Option[Column => Column],
-      cleanup: () => Unit)
-
   /**
-   * @param edges DataFrame with two id columns (default url_a/url_b), both
-   *        STRING or both STRUCT<long,long>
-   * @return (url, cluster_id) for every node that appears in `edges`
+   * @param edges DataFrame with two STRING url columns (default url_a/url_b)
+   * @return (url, cluster_id) for every node that appears in `edges`;
+   *         cluster_id is the component's minimum url
    */
   def run(edges: DataFrame, aCol: String = "url_a", bCol: String = "url_b",
-          maxIterations: Int = 50,
           localEdgeBudget: Long = localFinishEdges,
           edgesCanonical: Boolean = false): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    val res = converge(edges, aCol, bCol, maxIterations, localEdgeBudget, edgesCanonical)
-    val out =
-      if (res.rootsIncluded) res.assign.localCheckpoint(eager = true)
-      else {
-        // converged star edges point child -> root; roots (parents that are
-        // nobody's child) map to themselves
-        val roots = res.assign.select($"cluster_id".as("url"))
-          .distinct()
-          .join(res.assign, Seq("url"), "left_anti")
-          .select($"url", $"url".as("cluster_id"))
-        res.assign.unionByName(roots).localCheckpoint(eager = true)
-      }
-    res.cleanup()
-    out
+    // materialized once: the endpoint list and the hashed edge set both
+    // read it, and the caller's edge plan (a scoring join, say) runs once
+    val e = edges.select(col(aCol).as("url_a"), col(bCol).as("url_b"))
+      .localCheckpoint(eager = true)
+    val ends = e.select(col("url_a").as("url"))
+      .unionAll(e.select(col("url_b").as("url")))
+      .distinct()
+    assignAll(ends, e, "url", localEdgeBudget, edgesCanonical)
   }
 
-  /** Star-contraction loop (with bounded union-find finish) → child → root
-    * assignment; see [[Converged]] for the root-row contract.
-    *
-    * @param edgesCanonical caller GUARANTEES `edges` is already a distinct
-    *        pair set with no self-loops (the pair-generation paths all end
-    *        in a canonical-order dropDuplicates, and scoring only filters) —
-    *        the defensive `filter + distinct` here is then a full extra
-    *        exchange of the edge set for zero removed rows (guide §2.4:
-    *        "a distinct on data that is already unique"), skipped. The
-    *        algorithm itself never requires input uniqueness (the first
-    *        star round's distinct re-canonicalizes anyway); the flag only
-    *        drops redundant work, never changes the result. */
-  private def converge(edges: DataFrame, aCol: String, bCol: String,
-                       maxIterations: Int, localEdgeBudget: Long,
-                       edgesCanonical: Boolean = false): Converged = {
-    val idType = edges.schema(aCol).dataType
-    require(idType == StringType || isId128(idType),
-      s"connected components needs STRING or STRUCT<long,long> node ids, " +
-        s"got ${idType.simpleString}")
+  /**
+   * Full assignment over a STRING url universe `nodes(urlCol)`, closed over
+   * the STRING url edges `url_a`/`url_b`: (url, cluster_id) per node row,
+   * cluster_id the component's minimum url. Nodes absent from `edges` are
+   * their own cluster. Both sides are hashed in with `id128` and labelled
+   * back by [[clusterByMinUrl]].
+   */
+  def assignAll(nodes: DataFrame, edges: DataFrame, urlCol: String = "url",
+                localEdgeBudget: Long = localFinishEdges,
+                edgesCanonical: Boolean = false): DataFrame = {
+    val idType = edges.schema("url_a").dataType
+    require(idType == StringType, "connected components needs STRING url ids " +
+      s"(or STRUCT<long,long> ids through assignAllKeyed), got ${idType.simpleString}")
+    clusterByMinUrl(nodes.select(col(urlCol).as("url")),
+      edges.select(id128(col("url_a")).as("url_a"), id128(col("url_b")).as("url_b")),
+      localEdgeBudget, edgesCanonical)
+  }
+
+  /** Close the id-space `edges` over every url of `urls` (hashed here to its
+    * 128-bit node id) and label each component by its minimum member url:
+    * (url, cluster_id: url). Spark's `min` ranks the urls, so the label is
+    * the same whichever finish closed the component. The relabel is two
+    * thin shuffles at OUTPUT scale (one map-side-combined min per component
+    * + one join of the n-row assignment against the per-component labels),
+    * paid once — versus the id-width savings paid on every hot-path
+    * shuffle. */
+  private[graft] def clusterByMinUrl(urls: DataFrame, edges: DataFrame,
+      localEdgeBudget: Long = localFinishEdges,
+      edgesCanonical: Boolean = false): DataFrame = {
+    val assigned = assignAllKeyed(urls.select(col("url"), id128(col("url")).as("nid")),
+      edges, "nid", localEdgeBudget, edgesCanonical)
+    val labels = assigned.groupBy(col("cluster_id"))
+      .agg(min(col("url")).as("cluster_url"))
+    assigned.join(labels, Seq("cluster_id"))
+      .select(col("url"), col("cluster_url").as("cluster_id"))
+  }
+
+  /**
+   * Full assignment over a node universe of 128-bit ids, preserving every
+   * column of `nodes`: clusters are closed over `nodes(idCol)` (matched
+   * against the STRUCT<long,long> endpoints `url_a`/`url_b` of `edges`) and
+   * appended as `cluster_id`, the component's minimum id. Nodes absent
+   * from `edges` (and component roots, which the converged star edges
+   * never list as a child) become their own cluster_id. The ER path passes
+   * (url, nid) nodes, so the url survives to relabel the hash clusters back
+   * to urls WITHOUT a second join against a dictionary.
+   *
+   * The star loop contracts the edge set until it fits the driver budget,
+   * then the local finish closes the rest. On the local-finish path the
+   * universe is labeled by the broadcast map directly (narrow projection,
+   * materialized so the broadcast is destroyed NOW); on the distributed
+   * path the converged assignment is materialized (O(nodes-in-edges) thin
+   * rows) and left-joined with a coalesce-to-self, so the final iteration's
+   * checkpoint blocks are freed NOW — a long-lived bench JVM otherwise
+   * accumulates one edge-set worth of storage per invocation.
+   *
+   * @param edgesCanonical caller GUARANTEES `edges` is already a distinct
+   *        pair set with no self-loops (the pair-generation paths all end
+   *        in a canonical-order dropDuplicates, and scoring only filters) —
+   *        the defensive `filter + distinct` here is then a full extra
+   *        exchange of the edge set for zero removed rows (guide §2.4:
+   *        "a distinct on data that is already unique"), skipped. The
+   *        algorithm itself never requires input uniqueness (the first
+   *        star round's distinct re-canonicalizes anyway); the flag only
+   *        drops redundant work, never changes the result.
+   */
+  def assignAllKeyed(nodes: DataFrame, edges: DataFrame, idCol: String,
+                     localEdgeBudget: Long = localFinishEdges,
+                     edgesCanonical: Boolean = false): DataFrame = {
+    val idType = edges.schema("url_a").dataType
+    require(isId128(idType), "connected components needs STRUCT<long,long> node ids " +
+      s"(STRING urls through run/assignAll/incremental), got ${idType.simpleString}")
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -166,25 +199,33 @@ object ConnectedComponents {
     // the same stage) at ccFanIn tasks — measured 600+ CPU-seconds starved
     // onto 16 tasks at 400k docs. Only the in-loop checkpoints (sized from
     // the shrinking edge count) use the small fan-in.
-    val renamed = edges.select(col(aCol).as("u"), col(bCol).as("v"))
+    val renamed = edges.select($"url_a".as("u"), $"url_b".as("v"))
     val e0 = (if (edgesCanonical) renamed
               else renamed.filter($"u" =!= $"v").distinct())
       .localCheckpoint(eager = true)
 
     val initialEdges = e0.count() // cheap: counts the checkpoint blocks
-    val e0Blocks = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(e0)
-    def freeE0(): Unit = e0Blocks.foreach(_.unpersist(blocking = false))
-    if (initialEdges == 0L)
-      return Converged(
-        e0.select($"u".as("url"), $"v".as("cluster_id")), rootsIncluded = false,
-        None, () => freeE0())
-    if (initialEdges <= localEdgeBudget && localEdgeBudget > 0L) {
-      val (assign, look, done) = localFinish(spark, e0)
-      // assign reads e0 (its node set) — blocks stay alive until the caller
-      // materializes, then cleanup frees them with the label broadcast
-      return Converged(assign, rootsIncluded = true, Some(look),
-        () => { done(); freeE0() })
+    // checkpoint blocks of the newest edge set; freed once nothing reads them
+    var prevBlocks = ColumnBridge.checkpointedRdd(e0)
+    def freeBlocks(): Unit = prevBlocks.foreach(_.unpersist(blocking = false))
+    // local-finish path: label the universe with the broadcast map — a
+    // narrow projection, zero shuffles (absent node → itself inside the
+    // lookup). Materialized so the broadcast and the edge blocks can be
+    // freed NOW.
+    def finishLocally(e: DataFrame): DataFrame = {
+      val (look, destroy) = localFinish(spark, e)
+      val out = nodes.withColumn("cluster_id", look(col(idCol)))
+        .localCheckpoint(eager = true)
+      destroy()
+      freeBlocks()
+      out
     }
+    if (initialEdges == 0L) {
+      freeBlocks()
+      return nodes.withColumn("cluster_id", col(idCol))
+    }
+    if (initialEdges <= localEdgeBudget && localEdgeBudget > 0L)
+      return finishLocally(e0)
 
     // The iterative loop's serial floor is (stage waves) × (per-wave
     // scheduling latency), paid identically at every cluster size — the
@@ -206,13 +247,11 @@ object ConnectedComponents {
     loop.conf.set("spark.sql.adaptive.enabled", "false")
     var parts = loopShufflePartitions(initialEdges)
     loop.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    var e = org.apache.spark.sql.graftbridge.ColumnBridge.rebindToSession(loop, e0)
+    var e = ColumnBridge.rebindToSession(loop, e0)
 
     var converged = false
     var iter = 0
     var lastSig: (Long, Long) = (-1L, -1L)
-    var prevBlocks: Option[org.apache.spark.rdd.RDD[_]] =
-      org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(e0)
 
     // One large-star + small-star application (Kiveris et al.). Each star
     // is a single window min: one shuffle + sort on the star's center node,
@@ -265,7 +304,7 @@ object ConnectedComponents {
       // round's checkpoint blocks are dead — free them now instead of
       // waiting for the async ContextCleaner (GC-stall avoidance)
       prevBlocks.foreach(_.unpersist(blocking = false))
-      prevBlocks = org.apache.spark.sql.graftbridge.ColumnBridge.checkpointedRdd(next)
+      prevBlocks = ColumnBridge.checkpointedRdd(next)
       lastSig = sig
       e = next
       iter += 1
@@ -274,12 +313,8 @@ object ConnectedComponents {
       // in memory. Star rounds only ever shrink the surviving-node set by
       // dropping nodes already equal to their component min, so union-find
       // over the CURRENT edge set yields exactly the fixpoint's components.
-      if (!converged && sig._1 <= localEdgeBudget && localEdgeBudget > 0L) {
-        val (assign, look, done) = localFinish(spark, next)
-        val blocksNow = prevBlocks
-        return Converged(assign, rootsIncluded = true, Some(look),
-          () => { done(); blocksNow.foreach(_.unpersist(blocking = false)) })
-      }
+      if (!converged && sig._1 <= localEdgeBudget && localEdgeBudget > 0L)
+        return finishLocally(next)
       // decay the loop parallelism with the contracting edge set (the
       // checksum already counted it — no extra job)
       val nextParts = loopShufflePartitions(sig._1)
@@ -289,57 +324,26 @@ object ConnectedComponents {
       }
     }
     if (!converged)
-      // star-contraction halves component diameter per round, so 50 rounds
-      // covers diameters ~2^50; hitting this means pathological input, and
-      // silently returning would split components across cluster_ids
+      // hitting this means pathological input, and silently returning
+      // would split components across cluster_ids
       throw new IllegalStateException(
         s"connected components did not converge after $maxIterations iterations " +
-        s"(edges=${lastSig._1}); raise maxIterations or check the edge set")
+        s"(edges=${lastSig._1}); check the edge set")
 
-    val assign = e.select(
-        greatest($"u", $"v").as("url"), least($"u", $"v").as("root"))
-      .groupBy($"url").agg(min($"root").as("cluster_id"))
-    val finalBlocks = prevBlocks
-    Converged(assign, rootsIncluded = false, None,
-      () => finalBlocks.foreach(_.unpersist(blocking = false)))
+    val cc = e.select(
+        greatest($"u", $"v").as("node"), least($"u", $"v").as("root"))
+      .groupBy($"node").agg(min($"root").as("cluster_id"))
+      .select($"node".as(idCol), $"cluster_id")
+      .localCheckpoint(eager = true)
+    freeBlocks()
+    nodes
+      .join(cc, Seq(idCol), "left")
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
   }
 
   private def isId128(dt: DataType): Boolean = dt match {
     case st: StructType => st.fields.length == 2 && st.fields.forall(_.dataType == LongType)
     case _ => false
-  }
-
-  /** Bounded driver-side closure: collect ≤ [[localFinishEdges]] thin pairs,
-    * close them with [[componentMins]], label every component by its minimum
-    * id (the loop's deterministic labeling contract), and BROADCAST the
-    * node → label map instead of re-creating a LocalRelation of O(nodes)
-    * rows on the driver (measured 4.5 s of single-threaded encode + a
-    * downstream shuffle join at 940k edges; the broadcast + narrow lookup
-    * costs ~1 s and no shuffle). The edge column's type picks one of the two
-    * concrete finishes, [[localFinishString]] or [[localFinish128]]. Returns
-    * the assignment over the edge set's own (distributed, distinct) node
-    * set, the lookup expression builder for callers with a wider node
-    * universe, and the broadcast's destroy callback. Replaces the geometric
-    * tail of near-empty star rounds whose per-round cost is pure stage-wave
-    * latency on ANY cluster size.
-    *
-    * Driver-memory contract: the collect is bounded by [[localFinishEdges]]
-    * rows, but the BYTES depend on the id width — 2M (url, url) pairs at
-    * ~80 B/url approach the default 1g `spark.driver.maxResultSize`, which
-    * is why graft.ops.Sessions raises it to 4g in every production session
-    * (16-byte hash ids sit two orders below the ceiling). Callers running
-    * bare sessions near the 2M budget must either raise maxResultSize or
-    * pass a smaller `localEdgeBudget`. */
-  private def localFinish(spark: SparkSession, edges: DataFrame)
-      : (DataFrame, Column => Column, () => Unit) = {
-    val (look, destroy) = edges.schema("u").dataType match {
-      case StringType => localFinishString(spark, edges)
-      case st: StructType => localFinish128(spark, edges, st)
-    }
-    val assign = edges.select(col("u").as("url")).unionAll(edges.select(col("v").as("url")))
-      .distinct()
-      .select(col("url"), look(col("url")).as("cluster_id"))
-    (assign, (c: Column) => look(c), destroy)
   }
 
   /** Union-find with path compression over dense node indices `0 until n`
@@ -371,57 +375,29 @@ object ConnectedComponents {
     Array.tabulate(n)(i => minIdx(find(i)))
   }
 
-  /** [[localFinish]] for STRING node ids (dedup groups, cc_components,
-    * batch-incremental ER). Labels compare as Java strings — identical to
-    * Spark's UTF8String binary order for the ASCII urls this pipeline
-    * produces, so both finishes label a component alike. */
-  private def localFinishString(spark: SparkSession, edges: DataFrame)
-      : (UserDefinedFunction, () => Unit) = {
-    // Rows in, java-UDF overload out: the typed form (a tuple-encoder
-    // collect and a Scala UDF) measured ~60 ms slower per closure of a
-    // few-thousand-edge dedup group set on a 4-vCPU host
-    val pairs = edges.select(col("u"), col("v")).collect()
-    val idx = new java.util.HashMap[String, Integer](pairs.length * 2)
-    val names = new scala.collection.mutable.ArrayBuffer[String](pairs.length)
-    def id(s: String): Int = {
-      val known = idx.get(s)
-      if (known != null) known
-      else { idx.put(s, names.length); names += s; names.length - 1 }
-    }
-    val ea = new Array[Int](pairs.length)
-    val eb = new Array[Int](pairs.length)
-    var e = 0
-    while (e < pairs.length) {
-      ea(e) = id(pairs(e).getString(0)); eb(e) = id(pairs(e).getString(1))
-      e += 1
-    }
-    val mins = componentMins(names.length, ea, eb, (i, j) => names(i) < names(j))
-    // node → component label, roots included as self-rows; ≤ 2 × budget
-    // entries ≈ the same order of driver memory as the collected pairs
-    val label = new java.util.HashMap[String, String](names.length * 2)
-    var i = 0
-    while (i < names.length) { label.put(names(i), names(mins(i))); i += 1 }
-    val bc = spark.sparkContext.broadcast(label)
-    val look = udf(new org.apache.spark.sql.api.java.UDF1[String, String] {
-      override def call(u: String): String = {
-        val v = bc.value.get(u)
-        if (v == null) u else v // absent node = its own singleton component
-      }
-    }, StringType)
-    (look, () => bc.destroy())
-  }
-
-  /** [[localFinish]] for STRUCT<long,long> node ids (the ER hot path):
-    * edges collect as four primitive longs per row, the node→dense-id map
-    * is one open-addressed probe table in flat long arrays, and the
-    * broadcast ships five primitive arrays — ~0 boxing. A boxed
-    * HashMap[Row, Row] broadcast through java serialization measured a
-    * 7.6 s single-threaded driver gap at the 2 M-edge budget (900k-doc
+  /** Bounded driver-side closure: collect ≤ [[localFinishEdges]] id pairs,
+    * close them with [[componentMins]], label every component by its minimum
+    * id (the loop's deterministic labeling contract), and BROADCAST the
+    * node → label map instead of re-creating a LocalRelation of O(nodes)
+    * rows on the driver (measured 4.5 s of single-threaded encode + a
+    * downstream shuffle join at 940k edges; the broadcast + narrow lookup
+    * costs ~1 s and no shuffle). Returns the lookup (absent node → itself)
+    * and the broadcast's destroy callback. Replaces the geometric tail of
+    * near-empty star rounds whose per-round cost is pure stage-wave latency
+    * on ANY cluster size.
+    *
+    * Edges collect as four primitive longs per row (32 B per edge, 64 MB at
+    * the budget — inside Spark's 1g default `spark.driver.maxResultSize`),
+    * the node→dense-id map is one open-addressed probe table in flat long
+    * arrays, and the broadcast ships five primitive arrays — ~0 boxing. A
+    * boxed HashMap[Row, Row] broadcast through java serialization measured
+    * a 7.6 s single-threaded driver gap at the 2 M-edge budget (900k-doc
     * corpus) — pure core-count-independent floor that caps the N-vs-4N
     * scaling ratio. */
-  private def localFinish128(spark: SparkSession, edges: DataFrame, st: StructType)
+  private def localFinish(spark: SparkSession, edges: DataFrame)
       : (UserDefinedFunction, () => Unit) = {
     import spark.implicits._
+    val st = edges.schema("u").dataType.asInstanceOf[StructType]
     val (f0, f1) = (st.fields(0).name, st.fields(1).name)
     val quads = edges
       .select(col("u").getField(f0), col("u").getField(f1),
@@ -497,57 +473,6 @@ object ConnectedComponents {
   }
 
   /**
-   * Full assignment over a node universe: nodes absent from `edges` (and
-   * component roots, which the converged star edges never list as a child)
-   * become their own cluster_id via the coalesce-to-self — this skips the
-   * roots anti-join `run` needs on the distributed path, two shuffles fewer
-   * on the flagship path.
-   *
-   * On the local-finish path the universe is labeled by the broadcast map
-   * directly (narrow projection, materialized so the broadcast is destroyed
-   * NOW); on the distributed path the converged assignment is materialized
-   * (O(nodes-in-edges) thin rows) and left-joined, so the final iteration's
-   * checkpoint blocks are freed NOW — a long-lived bench JVM otherwise
-   * accumulates one edge-set worth of storage per invocation.
-   */
-  def assignAll(nodes: DataFrame, edges: DataFrame, urlCol: String = "url",
-                localEdgeBudget: Long = localFinishEdges,
-                edgesCanonical: Boolean = false): DataFrame =
-    assignAllKeyed(nodes.select(col(urlCol).as("url")), edges, "url",
-      localEdgeBudget, edgesCanonical)
-
-  /** [[assignAll]] preserving every column of `nodes`: clusters are closed
-    * over `nodes(idCol)` (matched against the edge endpoints) and appended
-    * as `cluster_id` of the same type. This is what the 128-bit-id ER path
-    * needs — the node universe carries (url, nid) and the url must survive
-    * to relabel the hash clusters back to urls WITHOUT a second join
-    * against a dictionary. */
-  def assignAllKeyed(nodes: DataFrame, edges: DataFrame, idCol: String,
-                     localEdgeBudget: Long = localFinishEdges,
-                     edgesCanonical: Boolean = false): DataFrame = {
-    val res = converge(edges, "url_a", "url_b", maxIterations = 50,
-      localEdgeBudget, edgesCanonical)
-    res.lookup match {
-      case Some(look) =>
-        // local-finish path: label the universe with the broadcast map — a
-        // narrow projection, zero shuffles (absent node → itself inside the
-        // lookup). Materialized so the broadcast can be destroyed NOW.
-        val out = nodes.withColumn("cluster_id", look(col(idCol)))
-          .localCheckpoint(eager = true)
-        res.cleanup()
-        out
-      case None =>
-        val cc = res.assign
-          .select(col("url").as(idCol), col("cluster_id"))
-          .localCheckpoint(eager = true)
-        res.cleanup()
-        nodes
-          .join(cc, Seq(idCol), "left")
-          .withColumn("cluster_id", coalesce(col("cluster_id"), col(idCol)))
-    }
-  }
-
-  /**
    * Incremental cluster maintenance: fold a DELTA edge batch into an
    * existing `(id, cluster_id)` assignment, recomputing only the components
    * the delta touches. This is how a 10^12-document corpus is actually
@@ -558,7 +483,7 @@ object ConnectedComponents {
    * clusters but never merges clusters with each other).
    *
    * Semantics: returns exactly `run(starEdges(assignment) ∪ delta)` over
-   * the union graph — min-id component labels, one row per node of
+   * the union graph — min-url component labels, one row per node of
    * `assignment ∪ delta` — but does the star-loop work only on the
    * affected subgraph:
    *
@@ -575,7 +500,7 @@ object ConnectedComponents {
    *      neighborhood, not of the corpus.
    *
    * Label stability: an untouched component keeps its label verbatim. A
-   * touched component's new label is the min id over every merged piece —
+   * touched component's new label is the min url over every merged piece —
    * the same deterministic labeling a from-scratch [[run]] over the union
    * graph produces (equality is the ConnectedComponentsSpec property).
    *
@@ -586,19 +511,18 @@ object ConnectedComponents {
    * joins rather than a driver OOM (at which point a from-scratch [[run]]
    * is the honest tool). No driver-side collection anywhere.
    *
-   * @param assignment (idCol, labelCol) rows, the output contract of
-   *                   [[run]]/[[assignAll]] (root self-rows included or
-   *                   not — both work: roots are reachable from their
-   *                   children's star edges, and a singleton's self-row
-   *                   survives either as an untouched row or via D).
-   * @param deltaEdges new (aCol, bCol) match edges; endpoints need not
+   * @param assignment (idCol, labelCol) STRING url rows, the output
+   *                   contract of [[run]]/[[assignAll]] (root self-rows
+   *                   included or not — both work: roots are reachable from
+   *                   their children's star edges, and a singleton's
+   *                   self-row survives either as an untouched row or via D).
+   * @param deltaEdges new (aCol, bCol) STRING url edges; endpoints need not
    *                   appear in `assignment` (brand-new documents form
    *                   new components).
    */
   def incremental(assignment: DataFrame, deltaEdges: DataFrame,
                   idCol: String = "url", labelCol: String = "cluster_id",
                   aCol: String = "url_a", bCol: String = "url_b",
-                  maxIterations: Int = 50,
                   localEdgeBudget: Long = localFinishEdges): DataFrame = {
     val delta = deltaEdges.select(col(aCol).as("u"), col(bCol).as("v"))
     val deltaNodes = delta.select(col("u").as(idCol))
@@ -616,7 +540,7 @@ object ConnectedComponents {
       .join(touched, Seq(labelCol), "left_semi")
       .select(col(idCol).as("u"), col(labelCol).as("v"))
     val merged = run(affectedStars.unionByName(delta), "u", "v",
-        maxIterations, localEdgeBudget)
+        localEdgeBudget = localEdgeBudget)
       .select(col("url").as(idCol), col("cluster_id").as(labelCol))
     untouched.select(col(idCol), col(labelCol)).unionByName(merged)
   }

@@ -34,8 +34,9 @@ import graft.functions.GraftFunctions._
  *                              chain transitively), so big dup families are
  *                              not lost
  *      n > purgeLimit          purged (boilerplate blocks carry no signal);
- *                              measure with `blockBranchStats` and write it
- *                              to lineage — never silent by construction
+ *                              no counter records a purge —
+ *                              `Blocking.blockStats` reports block sizes
+ *                              when a caller asks
  */
 object Dedup {
 
@@ -166,7 +167,7 @@ object Dedup {
     // family, direct pairing to the family rep; closure-equivalent)
     val (exactPairs0, setStats) = blockPairsWithStats(
         feats.select(col("setkey").as("key"), col("id")),
-        struct(col("id")), cfg.maxBlock, Int.MaxValue, cfg.snWindow, p => p("id"),
+        struct(col("id")), cfg.maxBlock, Int.MaxValue, cfg.snWindow,
         oversizedStar = true)
     val exactPairs = exactPairs0
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), lit(1.0).as("jaccard"))
@@ -205,7 +206,7 @@ object Dedup {
         explode(minhash_band_keys(col("sig"), cfg.bands, cfg.rowsPerBand)).as("key"),
         col("id"))
       val thin = blockPairs(blocks, struct(col("id")), cfg.maxBlock,
-          cfg.purgeLimit, cfg.snWindow, p => p("id"))
+          cfg.purgeLimit, cfg.snWindow)
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
         .dropDuplicates("id_a", "id_b")
       // bare build sides (aliases applied above the joins): the two
@@ -292,7 +293,7 @@ object Dedup {
     // tier 1: identical fingerprints (hamming 0); star pairs beyond maxBlock
     val (exactPairs0, fpStats) = blockPairsWithStats(
         fp.select(col("fp").as("key"), col("id")),
-        struct(col("id")), cfg.maxBlock, Int.MaxValue, cfg.snWindow, p => p("id"),
+        struct(col("id")), cfg.maxBlock, Int.MaxValue, cfg.snWindow,
         oversizedStar = true)
     val exactPairs = exactPairs0
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), lit(0).as("hamming"))
@@ -314,7 +315,7 @@ object Dedup {
       explode(simhash_band_keys(col("fp"), cfg.segments, cfg.choose)).as("key"),
       col("id"), col("fp"))
     val nearPairs = blockPairs(blocks, struct(col("id"), col("fp")), cfg.maxBlock,
-        cfg.purgeLimit, cfg.snWindow, p => p("fp"))
+        cfg.purgeLimit, cfg.snWindow, sortKey = Some(col("fp")))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         hamming_dist64(col("a.fp"), col("b.fp")).as("hamming"))
       .filter(col("hamming").between(1, cfg.maxHamming)) // verify pre-shuffle
@@ -364,7 +365,7 @@ object Dedup {
       explode(srp_band_keys(col("vec"), cfg.bands, cfg.bits, cfg.seed)).as("key"),
       col("id"))
     val thin = blockPairs(blocks, struct(col("id")), cfg.maxBlock,
-        cfg.purgeLimit, cfg.snWindow, p => p("id"))
+        cfg.purgeLimit, cfg.snWindow)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
     // bare build sides → one broadcast for both vector-attach joins
@@ -440,8 +441,6 @@ object Dedup {
    * edges as canonical (`edgesCanonical = true`), which excludes self-loops.
    *
    * @param payload  struct whose FIRST field must be `id`
-   * @param sortKey  block-local order (sort similar members adjacently:
-   *                 fingerprint for simhash, id otherwise); ties break on id
    * @param oversizedStar oversized blocks emit STAR pairs (block-min payload
    *                 × each member, O(n) rows) instead of sorted-neighborhood
    *                 chains — the right shape for EXACT-identity tiers, where
@@ -461,8 +460,10 @@ object Dedup {
    *                 batch members = 250M pairs each dragging two signature
    *                 payloads, the shape that OOM-killed the 3.3M-doc fold
    *                 rehearsal at 60 GB of shuffle.
-   * @param rowSortKey block order as a column over the BLOCK ROW instead of
-   *                 over the payload; overrides `sortKey`. Heavy sort-only
+   * @param sortKey  block-local order as a column over the BLOCK ROW (sort
+   *                 similar members adjacently: mention for ER, fingerprint
+   *                 for simhash); None orders by id, and ties break on id.
+   *                 A row column, not a payload field: heavy sort-only
    *                 columns (the ER mention string) must not ride the
    *                 payload, which a small block's tails copy up to cap
    *                 times per member: a 40-60 B mention on a 16 B id
@@ -472,12 +473,11 @@ object Dedup {
    */
   private[graft] def blockPairs(blocks: DataFrame, payload: Column, cap: Int,
       purgeLimit: Int = 1000000, snWindow: Int = 8,
-      sortKey: Column => Column = p => p.getField("id"),
       oversizedStar: Boolean = false,
       touching: Option[Column => Column] = None,
-      rowSortKey: Option[Column] = None): DataFrame =
-    blockPairsWithStats(blocks, payload, cap, purgeLimit, snWindow, sortKey,
-      oversizedStar, touching, rowSortKey)._1
+      sortKey: Option[Column] = None): DataFrame =
+    blockPairsWithStats(blocks, payload, cap, purgeLimit, snWindow,
+      oversizedStar, touching, sortKey)._1
 
   /** [[blockPairs]] also returning its per-key stats table
     * `(key, n, pmin [, nTouch])` — one row per DISTINCT non-null key
@@ -487,10 +487,9 @@ object Dedup {
     * second groupBy over the same keys. */
   private[graft] def blockPairsWithStats(blocks: DataFrame, payload: Column, cap: Int,
       purgeLimit: Int = 1000000, snWindow: Int = 8,
-      sortKey: Column => Column = p => p.getField("id"),
       oversizedStar: Boolean = false,
       touching: Option[Column => Column] = None,
-      rowSortKey: Option[Column] = None): (DataFrame, DataFrame) = {
+      sortKey: Option[Column] = None): (DataFrame, DataFrame) = {
     val spark = blocks.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -500,7 +499,7 @@ object Dedup {
     // into a single giant pseudo-block was never intended and cannot scale.
     // Callers whose key is meaningfully nullable must map null to a sentinel.
     val rows = blocks.filter($"key".isNotNull).select(
-      Seq($"key", payload.as("p")) ++ rowSortKey.map(_.as("s")): _*)
+      Seq($"key", payload.as("p")) ++ sortKey.map(_.as("s")): _*)
     // min(p) is the star center (struct ordering is field-lexicographic and
     // `id` is the first field, so it is the block's min id — deterministic
     // under retries)
@@ -514,7 +513,7 @@ object Dedup {
 
     val nParts = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions / 2)
-    val ord = rowSortKey.map(_ => $"s").getOrElse(sortKey($"p"))
+    val ord = sortKey.fold($"p.id")(_ => $"s")
     // descending, so the growing frame (UNBOUNDED PRECEDING .. 1 PRECEDING)
     // holds the members after the row; desc `lead` d is asc `lag` d, which
     // gives the same chain links
@@ -545,20 +544,6 @@ object Dedup {
         when($"x.id" < $"y.id", $"x").otherwise($"y").as("a"),
         when($"x.id" < $"y.id", $"y").otherwise($"x").as("b"))
     (pairs, keyStats)
-  }
-
-  /**
-   * Lineage counters for the skew policy: how many blocks (and member rows)
-   * take each branch at the given caps. One aggregation over the block-key
-   * table — write it alongside checkpoints so purging is never silent.
-   */
-  def blockBranchStats(blocks: DataFrame, cap: Int, purgeLimit: Int): DataFrame = {
-    val sizes = blocks.groupBy("key").agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-    val branch = when(col("n") <= cap, "full_pairs")
-      .when(col("n") <= purgeLimit, "sorted_neighborhood")
-      .otherwise("purged")
-    sizes.groupBy(branch.as("branch"))
-      .agg(count(lit(1)).as("n_blocks"), sum(col("n")).as("n_rows"), max(col("n")).as("max_block"))
   }
 
   // ------------------------------------------------ benchmark decontamination

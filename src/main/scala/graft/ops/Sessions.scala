@@ -8,7 +8,7 @@ import org.apache.spark.sql.internal.StaticSQLConf
  * Bench, Verify, ScalingSuite, the rehearsals, Inspect and the erbench
  * runner).
  *
- * Two sizing recipes sit on top of [[builder]], each kept as data so
+ * Three sizing recipes sit on top of [[builder]], each kept as data so
  * SessionsSpec can pin it:
  *  - [[bench]]: the `graft.Bench` headline-query session, used by
  *    `tools/BenchExtra` and by `tools/Inspect` for query targets. Bench
@@ -16,6 +16,8 @@ import org.apache.spark.sql.internal.StaticSQLConf
  *  - [[scaling]]: the north-rule ER scaling session, used by
  *    `tools/ScalingSuite` (Bench's scaling child) and by `tools/Inspect`
  *    for the `er` target.
+ *  - [[rehearsal]]: the data-sized session of the three rehearsal tools
+ *    (`tools/DressRehearsal`, `IncRehearsal`, `AssignRehearsal`).
  *
  * `survival` carries the settings the 100×-scale dress rehearsal proved
  * necessary (BASELINE.md "failure→fix lessons") — they used to live only in
@@ -41,11 +43,11 @@ import org.apache.spark.sql.internal.StaticSQLConf
  *    on-disk and in-flight footprint vs the lz4 default for single-digit %
  *    CPU. Shuffle bytes are the binding resource on instance disks and on
  *    this memory-bandwidth-capped guest alike.
- *  - `spark.driver.maxResultSize=4g`: the CC local finish collects up to
- *    2M thin pairs (graft.cluster.ConnectedComponents' fixed driver budget;
- *    ≲ 250 MB of url pairs, far less with 128-bit hash ids) and the ANN
- *    top-up collects bounded query chunks; a run near those budgets must
- *    not die on the 1g default ceiling.
+ *  - `spark.driver.maxResultSize=4g`: the ANN top-up collects bounded
+ *    query chunks (graft.ann.Ann.completeTopK), and a run near that budget
+ *    must not die on the 1g default ceiling. The CC local finish collects
+ *    ≤ 64 MB (2M pairs of 128-bit ids, graft.cluster.ConnectedComponents'
+ *    fixed driver budget), inside the default either way.
  *
  * Two more entries are host and per-call costs, not rehearsal lessons:
  * `spark.file.transferTo=false` (reason at the entry) and
@@ -194,4 +196,35 @@ object Sessions {
   /** [[builder]] plus [[scalingConfigs]]. */
   def scaling(cores: Int, shufflePartitions: Int, appName: String): SparkSession.Builder =
     builder(cores, appName).config(scalingConfigs(shufflePartitions))
+
+  /** The rehearsal tools' settings for `rows` input rows on `cores` cores,
+    * spilling to the comma-separated `localDirs` (each tool spreads its
+    * shuffle over its own mix of disk and tmpfs).
+    *
+    * Shuffle partitions are sized from the DATA, not the core count: at 6M
+    * rows × ~1 KB of minhash/feature state, 64 partitions put ~100 MB of row
+    * data (several × that in object overhead) into every aggregation task
+    * and the dress rehearsal died with UNABLE_TO_ACQUIRE_MEMORY at any join
+    * strategy; ~50k rows per partition keeps per-task state comfortably
+    * inside its execution-memory share, and AQE coalesces the cheap stages
+    * back down by size. This is the knob a 100 TB run sets first.
+    *
+    * Spark's default join preference (sort-merge) is kept ON PURPOSE,
+    * unlike the bench/scaling sessions: SHJ's build map cannot spill, and
+    * at 6M docs a single attach-join build partition exceeded its execution
+    * memory share (SparkOutOfMemoryError in the first rehearsal run) — SMJ
+    * spills and finishes. SHJ is a latency win only while the build side
+    * fits per-task memory, i.e. at bench scale, never at 100 TB. */
+  def rehearsalConfigs(cores: Int, rows: Long, localDirs: String): Map[String, String] = Map(
+    "spark.sql.shuffle.partitions" -> math.max(cores * 2, (2 * rows / 50000).toInt).toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> (32 * MB).toString,
+    "spark.sql.files.maxPartitionBytes" -> (32 * MB).toString,
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * MB).toString,
+    "spark.local.dir" -> localDirs)
+
+  /** [[builder]] plus [[rehearsalConfigs]]. */
+  def rehearsal(cores: Int, rows: Long, localDirs: String, appName: String)
+      : SparkSession.Builder =
+    builder(cores, appName).config(rehearsalConfigs(cores, rows, localDirs))
 }

@@ -29,8 +29,9 @@ import graft.score.PairScorer
  * b+|mention| times, so id width is a first-order term in total shuffle
  * bytes — and on a memory-bandwidth-bound executor, bytes are wall-clock.
  * Urls are hashed in once (a pure expression over the cached feature scan,
- * no join) and restored once at output ([[clusterByMinUrl]]), which labels
- * every cluster by its lexicographic minimum url — the same labels
+ * no join) and restored once at output
+ * ([[ConnectedComponents.clusterByMinUrl]]), which labels every cluster by
+ * its minimum url under Spark's string order — the same labels
  * [[incremental]] produces over url-keyed state (property-tested in
  * ErPipelineSpec against a driver-side union-find over url-keyed edges).
  */
@@ -43,27 +44,6 @@ object ErPipeline {
       blocking: Blocking.Config = Blocking.Config(),
       scorer: PairScorer.Config = PairScorer.Config()) {
     def fingerprint: String = toString
-  }
-
-  /** Close the id-space `edges` over every page url (hashed to its 128-bit
-    * node id) and label each component by its minimum member url:
-    * (url, cluster_id: url). The relabel is two thin shuffles at OUTPUT
-    * scale (one map-side-combined min per component + one join of the
-    * n-row assignment against the per-component labels), paid once —
-    * versus the id-width savings paid on every hot-path shuffle.
-    * edgesCanonical: candidatePairs ends in a canonical-order
-    * dropDuplicates, attachFeatures joins one feature row per id, and
-    * scoring only filters — the edge set reaches CC already distinct with
-    * no self-loops, so CC's defensive distinct (a full extra exchange of
-    * the edge set, guide §2.4) is skipped. */
-  private def clusterByMinUrl(pages: DataFrame, edges: DataFrame): DataFrame = {
-    val nodes = pages.select(col("url"), id128(col("url")).as("nid"))
-    val assigned = ConnectedComponents.assignAllKeyed(nodes, edges, "nid",
-      edgesCanonical = true)
-    val labels = assigned.groupBy(col("cluster_id"))
-      .agg(min(col("url")).as("cluster_url"))
-    assigned.join(labels, Seq("cluster_id"))
-      .select(col("url"), col("cluster_url").as("cluster_id"))
   }
 
   /** pages → (url, cluster_id). `feats` is consumed twice (block keys and
@@ -93,7 +73,12 @@ object ErPipeline {
     val blocks = Blocking.blockKeys(feats, cfg.blocking)
     val pairs = Blocking.candidatePairs(blocks, cfg.blocking)
     val edges = PairScorer.score(Blocking.attachFeatures(pairs, feats), cfg.scorer)
-    val out = clusterByMinUrl(pages.toDF(), edges)
+    // edgesCanonical: candidatePairs ends in a canonical-order
+    // dropDuplicates, attachFeatures joins one feature row per id, and
+    // scoring only filters — the edge set reaches CC already distinct with
+    // no self-loops, so CC's defensive distinct (a full extra exchange of
+    // the edge set, guide §2.4) is skipped
+    val out = ConnectedComponents.clusterByMinUrl(pages.toDF(), edges, edgesCanonical = true)
     scope.close()
     out
   }
@@ -139,7 +124,8 @@ object ErPipeline {
     }
 
     stage("clusters", "pages", "edges") {
-      clusterByMinUrl(pagesT, edges)
+      // canonical edges, as in run
+      ConnectedComponents.clusterByMinUrl(pagesT, edges, edgesCanonical = true)
     }
   }
 

@@ -59,13 +59,8 @@ object AssignRehearsal {
     val arriveNovel = if (args.length > 2) args(2).toLong else 6000L
     val cores = if (args.length > 3) args(3).toInt else 32
 
-    val spark = graft.ops.Sessions.builder(cores, "graft-assign-rehearsal")
-      .config("spark.sql.shuffle.partitions",
-        math.max(cores * 2, (2 * canonDocs / 50000).toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
-      .config("spark.local.dir", "/tmp/graft-spark-local,/dev/shm/graft-spark-assign")
+    val spark = graft.ops.Sessions.rehearsal(cores, canonDocs,
+        "/tmp/graft-spark-local,/dev/shm/graft-spark-assign", "graft-assign-rehearsal")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.ingest.CorpusGen
 import graft.pipeline.ErPipeline
@@ -61,32 +60,14 @@ object DressRehearsal {
 
     // survival configs (window spill threshold, periodic GC, zstd shuffle,
     // driver result ceiling) come from Sessions.builder — they were proven
-    // HERE and now ship in every production session, not just this tool
-    val spark = graft.ops.Sessions.builder(cores, "graft-dress-rehearsal")
-      // Shuffle partitions sized from the DATA, not the core count: at 6M
-      // rows × ~1 KB of minhash/feature state, 64 partitions put ~100 MB of
-      // row data (several × that in object overhead) into every aggregation
-      // task and the run died with UNABLE_TO_ACQUIRE_MEMORY at any join
-      // strategy; ~50k rows per partition keeps per-task state comfortably
-      // inside its execution-memory share, and AQE coalesces the cheap
-      // stages back down by size. This is the knob a 100 TB run sets first.
-      .config("spark.sql.shuffle.partitions",
-        math.max(cores * 2, (2 * nDocs / 50000).toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (32L * 1024 * 1024).toString)
-      // Spark default join preference (sort-merge) kept ON PURPOSE, unlike
-      // the bench/scaling sessions: SHJ's build map cannot spill, and at
-      // 6M docs a single attach-join build partition exceeded its execution
-      // memory share (SparkOutOfMemoryError in the first rehearsal run) —
-      // SMJ spills and finishes. SHJ is a latency win only while the build
-      // side fits per-task memory, i.e. at bench scale, never at 100 TB.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
-      // shuffle/spill spread across BOTH disks (Spark round-robins blocks
-      // over the list): the rehearsal's live shuffle set peaked past the
-      // 72 GB ext4 headroom; adding tmpfs doubles it. A real cluster does
-      // the same with multiple instance volumes per executor.
-      .config("spark.local.dir", "/tmp/graft-spark-local,/dev/shm/graft-spark-rehearsal")
+    // HERE and now ship in every production session, not just this tool.
+    // Sessions.rehearsal adds the data-sized partitions and keeps the
+    // spillable SMJ default. Shuffle/spill spread across BOTH disks (Spark
+    // round-robins blocks over the list): the rehearsal's live shuffle set
+    // peaked past the 72 GB ext4 headroom; adding tmpfs doubles it. A real
+    // cluster does the same with multiple instance volumes per executor.
+    val spark = graft.ops.Sessions.rehearsal(cores, nDocs,
+        "/tmp/graft-spark-local,/dev/shm/graft-spark-rehearsal", "graft-dress-rehearsal")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val stats = new ShuffleStats

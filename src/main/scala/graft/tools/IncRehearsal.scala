@@ -53,27 +53,20 @@ object IncRehearsal {
     // the ~1% daily-crawl regime the fold is actually built for)
     val batchDenom = if (args.length > 3) args(3).toInt else 11
 
-    // same session discipline as DressRehearsal: data-sized shuffle
-    // partitions, spillable SMJ default, 32 MB splits, both local disks
-    val spark = graft.ops.Sessions.builder(cores, "graft-inc-rehearsal")
-      .config("spark.sql.shuffle.partitions",
-        math.max(cores * 2, (2 * nTotal / 50000).toInt).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32L * 1024 * 1024).toString)
-      .config("spark.sql.files.maxPartitionBytes", (32L * 1024 * 1024).toString)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", (16L * 1024 * 1024).toString)
-      // 2:1 toward tmpfs: the guest's /tmp is thin-provisioned (~70 GB real
-      // headroom despite a 252 GB df size) and the first 3.3M-doc fold run
-      // ENOSPC'd it when local dirs split shuffle+spill bytes 1:1. tmpfs
-      // bytes are RAM bytes, though — the second run OOM-killed the host at
-      // 60 GB of shm shuffle + a 68 GB JVM. BOTH failures were symptoms of
-      // the same disease: the fold phase's unpoliced batch×block cross join
-      // (fixed in ErPipeline.incremental / Blocking.deltaCandidatePairs —
-      // hot blocks now pair each fresh doc with ±snWindow neighbors, so the
-      // fold shuffles MBs, not tens of GBs). The 2:1 shm split stays as
-      // headroom for /tmp's thin provisioning, now far inside RAM budget.
-      .config("spark.local.dir",
-        "/dev/shm/graft-spark-rehearsal-a,/dev/shm/graft-spark-rehearsal-b,/tmp/graft-spark-local")
+    // the rehearsal session (Sessions.rehearsal), as in DressRehearsal.
+    // 2:1 toward tmpfs: the guest's /tmp is thin-provisioned (~70 GB real
+    // headroom despite a 252 GB df size) and the first 3.3M-doc fold run
+    // ENOSPC'd it when local dirs split shuffle+spill bytes 1:1. tmpfs
+    // bytes are RAM bytes, though — the second run OOM-killed the host at
+    // 60 GB of shm shuffle + a 68 GB JVM. BOTH failures were symptoms of
+    // the same disease: the fold phase's unpoliced batch×block cross join
+    // (fixed in ErPipeline.incremental / Blocking.deltaCandidatePairs —
+    // hot blocks now pair each fresh doc with ±snWindow neighbors, so the
+    // fold shuffles MBs, not tens of GBs). The 2:1 shm split stays as
+    // headroom for /tmp's thin provisioning, now far inside RAM budget.
+    val spark = graft.ops.Sessions.rehearsal(cores, nTotal,
+        "/dev/shm/graft-spark-rehearsal-a,/dev/shm/graft-spark-rehearsal-b,/tmp/graft-spark-local",
+        "graft-inc-rehearsal")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

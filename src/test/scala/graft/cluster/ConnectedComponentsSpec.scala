@@ -86,18 +86,44 @@ class ConnectedComponentsSpec extends SparkSpec {
     val dict = edgeDf.select(col("url_a").as("url")).union(edgeDf.select(col("url_b").as("url")))
       .distinct().select(col("url"), id128(col("url")).as("nid"))
     for (budget <- Seq(ConnectedComponents.localFinishEdges, 0L)) {
-      val asg = ConnectedComponents.run(hdf, localEdgeBudget = budget)
-      val got = partitions(asg.join(dict, asg("url") === dict("nid"))
-        .select(dict("url").as("u"), asg("cluster_id").cast("string").as("c"))
+      val asg = ConnectedComponents.assignAllKeyed(dict, hdf, "nid", localEdgeBudget = budget)
+      val got = partitions(asg
+        .select(col("url"), col("cluster_id").cast("string"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
       assert(got == want, s"budget $budget: struct-id partition diverged")
     }
     edgeDf.unpersist()
   }
 
+  test("labels are Spark's min url on every path, where UTF-16 and UTF-8 orders disagree") {
+    import spark.implicits._
+    // U+FF5E < U+1F600 in UTF-8 bytes (EF.. < F0..), the other way round in
+    // Java's UTF-16 chars (the surrogate D83D < FF5E). The ASCII chain hangs
+    // off U+1F600, so every url but U+FF5E starts with the larger char.
+    val tilde = "\uFF5E"
+    val smile = new String(Character.toChars(0x1F600))
+    val chain = (smile +: (0 until 6).map(i => s"$smile/$i")).sliding(2)
+      .map { case Seq(a, b) => (a, b) }.toSeq
+    val bridge = Seq((tilde, smile))
+    val all = bridge ++ chain
+    val members = all.flatMap { case (a, b) => Seq(a, b) }.distinct
+    def labels(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val want = members.map(_ -> tilde).toMap
+    val edges = all.toDF("url_a", "url_b")
+    for (budget <- Seq(ConnectedComponents.localFinishEdges, 0L))
+      assert(labels(ConnectedComponents.run(edges, localEdgeBudget = budget)) == want,
+        s"run at budget $budget")
+    val nodes = (members :+ "lonely").toDF("url")
+    assert(labels(ConnectedComponents.assignAll(nodes, edges)) == want + ("lonely" -> "lonely"))
+    val assignment = ConnectedComponents.run(chain.toDF("url_a", "url_b"))
+    assert(labels(assignment).values.toSet == Set(smile))
+    assert(labels(ConnectedComponents.incremental(assignment, bridge.toDF("url_a", "url_b"))) == want)
+  }
+
   test("Long-typed node ids are rejected, naming the type") {
-    // only the two id disciplines in use have a local finish: STRING urls
-    // and STRUCT<long,long> hashes
+    // the star loop and the local finish run on STRUCT<long,long> hashes
+    // only; STRING urls enter hashed, and nothing else is accepted
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("url_a", "url_b")
     val e = intercept[IllegalArgumentException](ConnectedComponents.run(edges))

@@ -207,7 +207,7 @@ class DedupSpec extends SparkSpec {
     for (star <- Seq(false, true); touch <- Seq(false, true); (df, li) <- layouts.zipWithIndex) {
       val payload = if (touch) struct(col("id"), col("fresh")) else struct(col("id"))
       val got = Dedup.blockPairs(df, payload, cap, purge, w, oversizedStar = star,
-          touching = if (touch) Some(p => p("fresh")) else None, rowSortKey = Some(col("s")))
+          touching = if (touch) Some(p => p("fresh")) else None, sortKey = Some(col("s")))
         .select(col("a.id"), col("b.id")).collect()
         .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
       val want = reference(star, touch)

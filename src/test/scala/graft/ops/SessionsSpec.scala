@@ -91,6 +91,26 @@ class SessionsSpec extends AnyFunSuite {
     }
   }
 
+  test("rehearsal recipe equals the sessions the three rehearsal tools built") {
+    // DressRehearsal's and IncRehearsal's literals (AssignRehearsal's lacked
+    // only the 32 MB split size): data-sized shuffle partitions with a
+    // 2-per-core floor, and the caller's local dirs
+    val mb = 1024L * 1024
+    for ((c, rows, parts) <- Seq((32, 3000000L, 120), (32, 600000L, 64), (4, 3300000L, 132))) {
+      val dirs = "/tmp/graft-spark-local,/dev/shm/graft-spark-rehearsal"
+      val expected = Map(
+        "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (32 * mb).toString,
+        "spark.sql.files.maxPartitionBytes" -> (32 * mb).toString,
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (16 * mb).toString,
+        "spark.local.dir" -> dirs)
+      assert(Sessions.rehearsalConfigs(c, rows, dirs) == expected)
+      assert(options(Sessions.rehearsal(c, rows, dirs, "r-spec")) ==
+        options(Sessions.builder(c, "r-spec")) ++ expected)
+    }
+  }
+
   test("builder defaults to local[cores] but never overrides a submitted master") {
     def masterOpt(b: org.apache.spark.sql.SparkSession.Builder): Option[String] =
       options(b).get("spark.master")
