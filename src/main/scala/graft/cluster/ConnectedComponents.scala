@@ -101,40 +101,55 @@ object ConnectedComponents {
   }
 
   /**
-   * @param edges DataFrame with two STRING url columns (default url_a/url_b)
-   * @return (url, cluster_id) for every node that appears in `edges`;
+   * @param edges DataFrame with two STRING url columns (default url_a/url_b);
+   *        an edge with a null endpoint links nothing and is dropped
+   * @return (url, cluster_id) for every node of the remaining edges, materialized;
    *         cluster_id is the component's minimum url
    */
   def run(edges: DataFrame, aCol: String = "url_a", bCol: String = "url_b",
           localEdgeBudget: Long = localFinishEdges,
           edgesCanonical: Boolean = false): DataFrame = {
+    requireUrlIds(edges.schema(aCol).dataType)
     // materialized once: the endpoint list and the hashed edge set both
     // read it, and the caller's edge plan (a scoring join, say) runs once
-    val e = edges.select(col(aCol).as("url_a"), col(bCol).as("url_b"))
+    val e = dropNullEdges(edges.select(col(aCol).as("url_a"), col(bCol).as("url_b")))
       .localCheckpoint(eager = true)
     val ends = e.select(col("url_a").as("url"))
       .unionAll(e.select(col("url_b").as("url")))
       .distinct()
-    assignAll(ends, e, "url", localEdgeBudget, edgesCanonical)
+    // materialized, so the callers' repeated reads (incremental reads its
+    // assignment three times) scan blocks instead of re-running the
+    // relabel, and the string edge blocks are freed NOW
+    val out = assignAll(ends, e, "url", localEdgeBudget, edgesCanonical)
+      .localCheckpoint(eager = true)
+    ColumnBridge.checkpointedRdd(e).foreach(_.unpersist(blocking = false))
+    out
   }
 
   /**
    * Full assignment over a STRING url universe `nodes(urlCol)`, closed over
    * the STRING url edges `url_a`/`url_b`: (url, cluster_id) per node row,
    * cluster_id the component's minimum url. Nodes absent from `edges` are
-   * their own cluster. Both sides are hashed in with `id128` and labelled
-   * back by [[clusterByMinUrl]].
+   * their own cluster; an edge with a null endpoint is dropped (its hash
+   * would be a real id, merging every node linked to null). Both sides are
+   * hashed in with `id128` and labelled back by [[clusterByMinUrl]].
    */
   def assignAll(nodes: DataFrame, edges: DataFrame, urlCol: String = "url",
                 localEdgeBudget: Long = localFinishEdges,
                 edgesCanonical: Boolean = false): DataFrame = {
-    val idType = edges.schema("url_a").dataType
-    require(idType == StringType, "connected components needs STRING url ids " +
-      s"(or STRUCT<long,long> ids through assignAllKeyed), got ${idType.simpleString}")
+    requireUrlIds(edges.schema("url_a").dataType)
     clusterByMinUrl(nodes.select(col(urlCol).as("url")),
-      edges.select(id128(col("url_a")).as("url_a"), id128(col("url_b")).as("url_b")),
+      dropNullEdges(edges).select(
+        id128(col("url_a")).as("url_a"), id128(col("url_b")).as("url_b")),
       localEdgeBudget, edgesCanonical)
   }
+
+  private def requireUrlIds(dt: DataType): Unit =
+    require(dt == StringType, "connected components needs STRING url ids " +
+      s"(or STRUCT<long,long> ids through assignAllKeyed), got ${dt.simpleString}")
+
+  private def dropNullEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("url_a").isNotNull && col("url_b").isNotNull)
 
   /** Close the id-space `edges` over every url of `urls` (hashed here to its
     * 128-bit node id) and label each component by its minimum member url:

@@ -1,6 +1,8 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Alias, CreateNamedStruct}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
 import graft.cluster.ConnectedComponents
@@ -469,7 +471,9 @@ object Dedup {
    *                 times per member: a 40-60 B mention on a 16 B id
    *                 multiplied the hottest stream's bytes ~4× for a column
    *                 only the window ORDER reads (guide §2.3). It is dropped
-   *                 before any pair is emitted.
+   *                 before any pair is emitted. A sort column the payload
+   *                 already holds (simhash's fp) is read from the payload
+   *                 instead, so it does not ride each shuffle twice.
    */
   private[graft] def blockPairs(blocks: DataFrame, payload: Column, cap: Int,
       purgeLimit: Int = 1000000, snWindow: Int = 8,
@@ -494,12 +498,15 @@ object Dedup {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
 
+    val inPayload = sortKey.flatMap(payloadField(blocks, payload, _))
+    val carried = sortKey.filter(_ => inPayload.isEmpty)
+
     // Null blocking keys are EXCLUDED by design: "null key" means "no
     // blocking signal", not "one shared block" — grouping every null-key row
     // into a single giant pseudo-block was never intended and cannot scale.
     // Callers whose key is meaningfully nullable must map null to a sentinel.
     val rows = blocks.filter($"key".isNotNull).select(
-      Seq($"key", payload.as("p")) ++ sortKey.map(_.as("s")): _*)
+      Seq($"key", payload.as("p")) ++ carried.map(_.as("s")): _*)
     // min(p) is the star center (struct ordering is field-lexicographic and
     // `id` is the first field, so it is the block's min id — deterministic
     // under retries)
@@ -513,7 +520,8 @@ object Dedup {
 
     val nParts = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions / 2)
-    val ord = sortKey.fold($"p.id")(_ => $"s")
+    val ord = inPayload.map($"p".getField)
+      .getOrElse(carried.fold($"p.id")(_ => $"s"))
     // descending, so the growing frame (UNBOUNDED PRECEDING .. 1 PRECEDING)
     // holds the members after the row; desc `lead` d is asc `lag` d, which
     // gives the same chain links
@@ -545,6 +553,15 @@ object Dedup {
         when($"x.id" < $"y.id", $"y").otherwise($"x").as("b"))
     (pairs, keyStats)
   }
+
+  /** Name of the `payload` field that holds exactly the value of `key` over
+    * `blocks` (same resolved, deterministic expression), if there is one. */
+  private def payloadField(blocks: DataFrame, payload: Column, key: Column): Option[String] =
+    blocks.select(payload.as("p"), key.as("s")).queryExecution.analyzed match {
+      case Project(Seq(Alias(p: CreateNamedStruct, _), Alias(s, _)), _) =>
+        p.names.zip(p.valExprs).collectFirst { case (n, v) if v.semanticEquals(s) => n.toString }
+      case _ => None
+    }
 
   // ------------------------------------------------ benchmark decontamination
   /**

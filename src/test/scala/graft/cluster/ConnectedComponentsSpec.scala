@@ -130,6 +130,21 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(e.getMessage.contains("bigint"), e.getMessage)
   }
 
+  test("an edge with a null endpoint links nothing") {
+    import spark.implicits._
+    // c and d both link to null: hashed as a node, null would merge them
+    val edges = Seq(("a", "b"), ("c", null), ("d", null)).toDF("url_a", "url_b")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val nodes = Seq("a", "b", "c", "d").toDF("url")
+    for (budget <- Seq(ConnectedComponents.localFinishEdges, 0L)) {
+      assert(labels(ConnectedComponents.run(edges, localEdgeBudget = budget)) ==
+        Map("a" -> "a", "b" -> "a"), s"run at budget $budget")
+      assert(labels(ConnectedComponents.assignAll(nodes, edges, localEdgeBudget = budget)) ==
+        Map("a" -> "a", "b" -> "a", "c" -> "c", "d" -> "d"), s"assignAll at budget $budget")
+    }
+  }
+
   test("empty edges, singletons via assignAll") {
     import spark.implicits._
     val nodes = Seq("a", "b", "c").toDF("url")

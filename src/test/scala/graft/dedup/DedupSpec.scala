@@ -217,6 +217,25 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("blockPairs reads a sort column the payload holds from the payload") {
+    import spark.implicits._
+    // two blocks of 15 > cap: the sorted-neighbourhood links follow the order
+    val df = (0 until 30).map(i => (i % 2L, f"d$i%02d", i * 7 % 5)).toDF("key", "id", "s")
+    def pairs(payload: org.apache.spark.sql.Column) =
+      Dedup.blockPairs(df, payload, cap = 3, snWindow = 2, sortKey = Some(col("s")))
+    def ids(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("a.id"), col("b.id")).collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    def shuffled(d: org.apache.spark.sql.DataFrame) = d.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.child.output.map(_.name)
+    }.flatten
+    val inPayload = pairs(struct(col("id"), col("s")))
+    val beside = pairs(struct(col("id")))
+    assert(!shuffled(inPayload).contains("s"), shuffled(inPayload))
+    assert(shuffled(beside).contains("s"), shuffled(beside))
+    assert(ids(inPayload) == ids(beside))
+  }
+
   test("simhash pairs detect planted near-dups") {
     val pairs = Dedup.simhashNearDupPairs(docs, "doc_id", "text",
         Dedup.SimHashConfig(maxHamming = 8, segments = 16))
